@@ -130,13 +130,11 @@ def write_minhash_index(
     when any bucket is near the cap: past it the probe path's
     bounded-recall cap starts to bind (r13 verdict item 6)."""
     import json as _json
-    import uuid as _uuid
 
     from ..streaming.ann_index_stream import (
-        invalidate_centroids,
-        reset_drift_ledger,
+        mark_index_rebuilt,
+        write_drift_baseline,
     )
-    from ..streaming.etl_stream import _meta_fs
     from .dedup import BUCKET_PRESSURE_BAR, _dup_stats
 
     sig = minhash_signatures(
@@ -156,13 +154,7 @@ def write_minhash_index(
         ).write.mode("overwrite").partitionBy("shard").parquet(
             f"{path}/shingles"
         )
-    invalidate_centroids(path)  # busts the cached drift baseline too
-
-    fs = _meta_fs(spark, path)
-    if fs.kind(f"{fs.root}/_batch_commits") is not None:
-        fs.delete_dir(f"{fs.root}/_batch_commits")
-    reset_drift_ledger(fs)
-    fs.write_bytes(f"{fs.root}/_index_epoch", _uuid.uuid4().hex.encode())
+    fs = mark_index_rebuilt(spark, path)
     # record the banding geometry: every later probe/append MUST band
     # with the same (n, bands, rows_per_band) or the slice hashes
     # disagree and the join silently matches nothing — the streams
@@ -206,19 +198,16 @@ def write_minhash_index(
             max_bucket,
             BUCKET_PRESSURE_BAR,
         )
-    fs.mkdirs(f"{fs.root}/_drift")
-    fs.write_bytes(
-        f"{fs.root}/_drift/baseline.json",
-        _json.dumps(
-            {
-                "n": n_docs,
-                "n_texts": n_texts,
-                "dup_rate": ((n_docs - n_texts) / n_docs) if n_docs else 0.0,
-                "max_bucket": max_bucket,
-                "near_cap_buckets": near_cap,
-                "kind": "minhash_dup_rate",
-            }
-        ).encode(),
+    write_drift_baseline(
+        fs,
+        {
+            "n": n_docs,
+            "n_texts": n_texts,
+            "dup_rate": ((n_docs - n_texts) / n_docs) if n_docs else 0.0,
+            "max_bucket": max_bucket,
+            "near_cap_buckets": near_cap,
+            "kind": "minhash_dup_rate",
+        },
     )
 
 

@@ -359,6 +359,25 @@ def _assign_clusters_res(vecs: DataFrame, centroids) -> DataFrame:
     )
 
 
+def assignment_stats(ares: DataFrame):
+    """One Row (n, max_cell, cells, sres) over ``_assign_clusters_res``
+    output: vectors, the largest cell's size, non-empty cells and the
+    summed residual distance — a k-bounded aggregate shared by the IVF
+    build-time drift baselines and the maintenance streams' drift
+    rows."""
+    occ = ares.groupBy("cluster").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.sqrt("res2")).alias("sres"),
+    )
+    (row,) = occ.agg(
+        F.sum("n").alias("n"),
+        F.max("n").alias("max_cell"),
+        F.count(F.lit(1)).alias("cells"),
+        F.sum("sres").alias("sres"),
+    ).collect()
+    return row
+
+
 def train_ivf_centroids(corpus: DataFrame, k: int = IVF_CLUSTERS, iters: int = IVF_LLOYD_ITERS):
     """Deterministic coarse quantizer: seed with the k corpus vectors
     of smallest xxhash64(vec_id) (a seedless, cluster-size-independent
@@ -621,16 +640,6 @@ def write_ivf_index(
     if centroids is None:
         centroids = train_ivf_centroids(c, n_clusters, iters)
     _write_ndarray(spark, centroids, f"{path}/centroids")
-    # an in-place retrain must not leave the maintenance stream
-    # assigning against the pre-rebuild matrix (its cache assumes
-    # landed snapshots are immutable — this write is the one
-    # sanctioned mutation, so it busts the cache itself)
-    from ..streaming.ann_index_stream import (
-        invalidate_centroids,
-        reset_drift_ledger,
-    )
-
-    invalidate_centroids(path)
     # postings are PARTITIONED by cluster (r10): a per-cluster read
     # prunes to its inverted list's files, and the streaming index
     # maintenance (streaming/ann_index_stream.py) appends batch-keyed
@@ -639,54 +648,32 @@ def write_ivf_index(
     _assign_clusters(c, centroids).write.mode("overwrite").partitionBy(
         "cluster"
     ).parquet(f"{path}/postings")
-    # Index-epoch fencing + drift baseline (r11):
-    # - a fresh random _index_epoch marks every rebuild; the
-    #   maintenance stream binds its checkpoint to the epoch it first
-    #   saw and REFUSES to run against a rebuilt index (a crashed
-    #   unmarked batch replaying against NEW centroids would append
-    #   vec_ids the rebuild already indexed — r10 advice);
-    # - stale maintenance commit markers from the pre-rebuild lineage
-    #   are cleared (the epoch fence makes them unreachable anyway);
-    # - the build-time assignment quality (mean residual distance,
-    #   cell-occupancy skew) lands in _drift/baseline.json — the
-    #   reference the streaming drift monitor compares arrivals
-    #   against to make the retrain cadence data-driven instead of
-    #   calendar-driven.  One extra assignment pass at build time,
-    #   which already runs multi-pass Lloyd — snapshot-build cost,
-    #   never query-path cost.
-    import json as _json
-    import uuid as _uuid
-
-    from ..streaming.etl_stream import _meta_fs
-
-    fs = _meta_fs(spark, path)
-    if fs.kind(f"{fs.root}/_batch_commits") is not None:
-        fs.delete_dir(f"{fs.root}/_batch_commits")
-    # the pre-rebuild drift ledger describes the index this rebuild
-    # replaces — clear it with the markers (r13 ADVICE; the fresh
-    # baseline below restarts the drift plane from this snapshot)
-    reset_drift_ledger(fs)
-    fs.write_bytes(f"{fs.root}/_index_epoch", _uuid.uuid4().hex.encode())
-    occ = _assign_clusters_res(c, centroids).groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.sqrt("res2")).alias("sres"),
+    # Index-epoch fencing + drift baseline (r11): a fresh random
+    # _index_epoch marks every rebuild and busts the maintenance
+    # stream's memoized centroids (mark_index_rebuilt), and the
+    # build-time assignment quality (mean residual distance,
+    # cell-occupancy skew) lands in _drift/baseline.json — the
+    # reference the streaming drift monitor compares arrivals against
+    # to make the retrain cadence data-driven instead of
+    # calendar-driven.  One extra assignment pass at build time, which
+    # already runs multi-pass Lloyd — snapshot-build cost, never
+    # query-path cost.
+    from ..streaming.ann_index_stream import (
+        mark_index_rebuilt,
+        write_drift_baseline,
     )
-    (row,) = occ.agg(
-        F.sum("n").alias("n"),
-        F.max("n").alias("max_cell"),
-        F.count(F.lit(1)).alias("cells"),
-        F.sum("sres").alias("sres"),
-    ).collect()
-    baseline = {
-        "n": row.n,
-        "k": int(len(centroids)),
-        "mean_residual": (row.sres / row.n) if row.n else 0.0,
-        "top_cell_share": (row.max_cell / row.n) if row.n else 0.0,
-        "nonempty_cells": row.cells,
-    }
-    fs.mkdirs(f"{fs.root}/_drift")
-    fs.write_bytes(
-        f"{fs.root}/_drift/baseline.json", _json.dumps(baseline).encode()
+
+    fs = mark_index_rebuilt(spark, path)
+    row = assignment_stats(_assign_clusters_res(c, centroids))
+    write_drift_baseline(
+        fs,
+        {
+            "n": row.n,
+            "k": int(len(centroids)),
+            "mean_residual": (row.sres / row.n) if row.n else 0.0,
+            "top_cell_share": (row.max_cell / row.n) if row.n else 0.0,
+            "nonempty_cells": row.cells,
+        },
     )
 
 
@@ -1424,6 +1411,19 @@ def pq_recon_partials(corpus: DataFrame, books) -> DataFrame:
     )
 
 
+def pq_mean_recon(corpus: DataFrame, books) -> tuple[int, float]:
+    """(n, mean PQ reconstruction error) of ``corpus`` — the folded
+    ``pq_recon_partials``, the quantity the PQ/IVFADC drift baselines
+    record and the maintenance streams compare arrivals against."""
+    (row,) = (
+        pq_recon_partials(corpus, books)
+        .agg(F.sum("n").alias("n"), F.sum("serr").alias("serr"))
+        .collect()
+    )
+    n = row.n or 0
+    return n, (row.serr / n) if n else 0.0
+
+
 def ann_pq_topk(
     spark: SparkSession,
     queries_df: DataFrame,
@@ -1652,44 +1652,18 @@ def write_pq_index(
     if books is None:
         books = train_pq_codebooks(c)
     _write_ndarray(spark, books, f"{path}/codebooks")
-    from ..streaming.ann_index_stream import (
-        invalidate_centroids,
-        reset_drift_ledger,
-    )
-
-    invalidate_centroids(path)
     pq_encode(c, books).withColumn(
         "shard", F.pmod(F.col("vec_id"), F.lit(PQ_CODE_SHARDS)).cast("int")
     ).write.mode("overwrite").partitionBy("shard").parquet(f"{path}/codes")
-
-    import json as _json
-    import uuid as _uuid
-
-    from ..streaming.etl_stream import _meta_fs
-
-    fs = _meta_fs(spark, path)
-    if fs.kind(f"{fs.root}/_batch_commits") is not None:
-        fs.delete_dir(f"{fs.root}/_batch_commits")
-    # the pre-rebuild drift ledger describes the index this rebuild
-    # replaces — clear it with the markers (r13 ADVICE; the fresh
-    # baseline below restarts the drift plane from this snapshot)
-    reset_drift_ledger(fs)
-    fs.write_bytes(f"{fs.root}/_index_epoch", _uuid.uuid4().hex.encode())
-    (row,) = (
-        pq_recon_partials(c, books)
-        .agg(F.sum("n").alias("n"), F.sum("serr").alias("serr"))
-        .collect()
+    from ..streaming.ann_index_stream import (
+        mark_index_rebuilt,
+        write_drift_baseline,
     )
-    fs.mkdirs(f"{fs.root}/_drift")
-    fs.write_bytes(
-        f"{fs.root}/_drift/baseline.json",
-        _json.dumps(
-            {
-                "mean_residual": (row.serr / row.n) if row.n else 0.0,
-                "n": row.n,
-                "kind": "pq_reconstruction",
-            }
-        ).encode(),
+
+    fs = mark_index_rebuilt(spark, path)
+    n, mean_recon = pq_mean_recon(c, books)
+    write_drift_baseline(
+        fs, {"mean_residual": mean_recon, "n": n, "kind": "pq_reconstruction"}
     )
 
 
@@ -1758,6 +1732,33 @@ def _unit_corpus(c: DataFrame) -> DataFrame:
     )
 
 
+def ivfpq_residuals(
+    spark: SparkSession, cn: DataFrame, assigned: DataFrame, cents
+) -> DataFrame:
+    """(vec_id, cluster, emb_d = x̂ − centroid[cell], norm=1) for the
+    unit vectors ``cn`` and their (vec_id, cluster) assignment: one
+    JVM-side zip_with against a broadcast k×dim centroid table.  The
+    residual every IVFADC stage codes — the build, its recon
+    baseline, the maintenance stream and the semantic gate."""
+    from ..session import local_rows_df
+
+    cent_df = local_rows_df(
+        spark,
+        [(int(i), [float(v) for v in cents[i]]) for i in range(len(cents))],
+        "cluster int, carr array<double>",
+    )
+    return (
+        cn.join(assigned.select("vec_id", "cluster"), "vec_id")
+        .join(F.broadcast(cent_df), "cluster")
+        .select(
+            "vec_id",
+            "cluster",
+            F.zip_with("emb_d", "carr", lambda x, c: x - c).alias("emb_d"),
+            F.lit(1.0).alias("norm"),
+        )
+    )
+
+
 def ivfpq_build(
     spark: SparkSession,
     corpus_df: DataFrame,
@@ -1780,13 +1781,12 @@ def ivfpq_build(
     ride train_ivf_centroids' int64 fixed-point grid (bit-identical
     under any partitioning — the golden-oracle prerequisite),
     residuals are ONE JVM-side zip_with against a broadcast
-    k×dim centroid table (no Python in the corpus pass), and
+    k×dim centroid table (``ivfpq_residuals``, no Python in the
+    corpus pass), and
     train_pq_codebooks / pq_encode see residual rows with norm=1 so
     their internal normalization is a no-op.  ``coded`` is
     (cluster, vec_id, code[m]) — the inverted lists with 4-bit-per-
     subspace payloads, m/2 bytes a vector at scale."""
-    from ..session import local_rows_df
-
     cn = _unit_corpus(with_norm(corpus_df))
     cents = (
         centroids
@@ -1794,21 +1794,7 @@ def ivfpq_build(
         else train_ivf_centroids(cn, n_clusters, IVF_LLOYD_ITERS)
     )
     assigned = _assign_clusters(cn, cents)
-    cent_df = local_rows_df(
-        spark,
-        [(int(i), [float(v) for v in cents[i]]) for i in range(len(cents))],
-        "cluster int, carr array<double>",
-    )
-    res = (
-        cn.join(assigned, "vec_id")
-        .join(F.broadcast(cent_df), "cluster")
-        .select(
-            "vec_id",
-            "cluster",
-            F.zip_with("emb_d", "carr", lambda x, c: x - c).alias("emb_d"),
-            F.lit(1.0).alias("norm"),
-        )
-    )
+    res = ivfpq_residuals(spark, cn, assigned, cents)
     if books is None:
         books = train_pq_codebooks(res, m=m, ksub=ksub)
     coded = (
@@ -2135,41 +2121,19 @@ def write_ivfpq_index(
         ).repartition(F.col("shard")).write.mode("overwrite").partitionBy(
             "shard"
         ).parquet(f"{path}/vectors")
-    from ..streaming.ann_index_stream import (
-        invalidate_centroids,
-        reset_drift_ledger,
-    )
-
-    invalidate_centroids(path)
     coded.write.mode("overwrite").partitionBy("cluster").parquet(
         f"{path}/codes"
     )
+    from ..streaming.ann_index_stream import (
+        mark_index_rebuilt,
+        write_drift_baseline,
+    )
 
-    import json as _json
-    import uuid as _uuid
-
-    from ..streaming.etl_stream import _meta_fs
-
-    fs = _meta_fs(spark, path)
-    if fs.kind(f"{fs.root}/_batch_commits") is not None:
-        fs.delete_dir(f"{fs.root}/_batch_commits")
-    # the pre-rebuild drift ledger describes the index this rebuild
-    # replaces — clear it with the markers (r13 ADVICE; the fresh
-    # baseline below restarts the drift plane from this snapshot)
-    reset_drift_ledger(fs)
-    fs.write_bytes(f"{fs.root}/_index_epoch", _uuid.uuid4().hex.encode())
+    fs = mark_index_rebuilt(spark, path)
     ares = _assign_clusters_res(cn, cents)
     ares.persist()
     try:
-        occ = ares.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.sqrt("res2")).alias("sres"),
-        )
-        (row,) = occ.agg(
-            F.sum("n").alias("n"),
-            F.max("n").alias("max_cell"),
-            F.sum("sres").alias("sres"),
-        ).collect()
+        row = assignment_stats(ares)
         n = row.n or 0
         # SECOND staleness axis (r12 verdict item 5): the build-time
         # mean PQ reconstruction error of the corpus RESIDUALS.  A
@@ -2177,46 +2141,20 @@ def write_ivfpq_index(
         # while rotating within-cell structure degrades ADC precision
         # invisibly to the coarse signal — the maintenance stream
         # compares each batch's residual-coding error against this.
-        from ..session import local_rows_df
-
-        cent_df = local_rows_df(
-            spark,
-            [
-                (int(i), [float(v) for v in cents[i]])
-                for i in range(len(cents))
-            ],
-            "cluster int, carr array<double>",
+        _, mean_recon = pq_mean_recon(
+            ivfpq_residuals(spark, cn, ares, cents), books
         )
-        resid = (
-            cn.join(ares.select("vec_id", "cluster"), "vec_id")
-            .join(F.broadcast(cent_df), "cluster")
-            .select(
-                F.zip_with("emb_d", "carr", lambda x, c: x - c).alias(
-                    "emb_d"
-                ),
-                F.lit(1.0).alias("norm"),
-            )
-        )
-        (rr,) = (
-            pq_recon_partials(resid, books)
-            .agg(F.sum("n").alias("n"), F.sum("serr").alias("serr"))
-            .collect()
-        )
-        mean_recon = (rr.serr / rr.n) if rr.n else 0.0
     finally:
         ares.unpersist()
-    fs.mkdirs(f"{fs.root}/_drift")
-    fs.write_bytes(
-        f"{fs.root}/_drift/baseline.json",
-        _json.dumps(
-            {
-                "mean_residual": (row.sres / n) if n else 0.0,
-                "top_cell_share": (row.max_cell / n) if n else 0.0,
-                "mean_recon": mean_recon,
-                "n": n,
-                "kind": "ivfpq_coarse_residual",
-            }
-        ).encode(),
+    write_drift_baseline(
+        fs,
+        {
+            "mean_residual": (row.sres / n) if n else 0.0,
+            "top_cell_share": (row.max_cell / n) if n else 0.0,
+            "mean_recon": mean_recon,
+            "n": n,
+            "kind": "ivfpq_coarse_residual",
+        },
     )
 
 

@@ -2021,7 +2021,7 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAMPLING job over the input, so the orders scan ran TWICE per
     write; a hash exchange needs no boundaries, keeps every row group
     sorted on the filter columns — min/max pruning is per row group,
-    not per file, so the read-back prunes identically — and its key
+    not per file, so row-group pruning is preserved — and its key
     cardinality scales with the data instead of serializing one hot
     status onto one writer); the read is a pushed-down scan + one
     map-side-combined aggregate."""

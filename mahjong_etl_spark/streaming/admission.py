@@ -12,27 +12,6 @@ window-expressible because its rank ignores running totals), not
 expressible in ANSI SQL without a per-row recursive scan, and exactly
 what a state store is for.
 
-TWO WIRINGS, ONE PROCESSOR SEMANTICS:
-
-- ``admission_stream``: ``applyInPandasWithState`` (GroupState), the
-  engine's established stateful surface (sessionize, z-score anomaly).
-  This is the tested-in-CI production path.
-- ``admission_stream_tws`` + ``AdmissionProcessor``:
-  ``transformWithStateInPandas`` (Spark 4 arbitrary-state v2 API) —
-  named TYPED state variables per key (a ValueState of exact int64
-  totals plus a MapState of per-language admit counts) instead of one
-  hand-packed tuple.  The v2 runtime speaks protobuf between the JVM
-  and a Python state server (pyspark
-  ``sql/streaming/proto/StateMessage_pb2.py`` imports
-  ``google.protobuf`` at query start), and this build environment
-  does not ship the Python protobuf package, so CI drives
-  ``AdmissionProcessor`` through a faithful in-memory handle
-  (tests/test_admission_stream.py::FakeHandle) and pins it
-  row-identical to both the reference fold and the GroupState stream;
-  on a cluster whose Python env has protobuf (any real Spark distro
-  requirement set) the TWS wiring runs as-is with the RocksDB state
-  store provider.
-
 DETERMINISM DISCIPLINE (matches anomaly_stream.py): rows are folded
 in (ts, doc_id) order WITHIN each micro-batch group, so for any batch
 chopping that respects per-source arrival order the admitted set is
@@ -61,7 +40,6 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -109,11 +87,8 @@ def _fold_batch(
     n_acc: int,
     tok_acc: int,
     langs: set,
-    admit_lang,
 ) -> tuple[pd.DataFrame, int, int]:
-    """The shared greedy fold: one micro-batch group for one source.
-    ``admit_lang(lang)`` is called once per ACCEPTED doc so each
-    wiring can maintain its own language-state representation."""
+    """The greedy fold over one micro-batch group for one source."""
     batch = batch.sort_values(["ts", "doc_id"], kind="mergesort")
     out = []
     for r in batch.itertuples(index=False):
@@ -123,7 +98,6 @@ def _fold_batch(
             n_acc += 1
             tok_acc += tok
             langs.add(r.lang)
-            admit_lang(r.lang)
         out.append((source, int(r.doc_id), tok, ok, tok_acc, len(langs)))
     return (
         pd.DataFrame(
@@ -142,11 +116,6 @@ def _fold_batch(
     )
 
 
-# ---------------------------------------------------------------------------
-# Wiring 1 (CI production path): applyInPandasWithState
-# ---------------------------------------------------------------------------
-
-
 def _admit_group(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -157,13 +126,11 @@ def _admit_group(
         n_acc = tok_acc = 0
         langs = set()
     batch = pd.concat(list(pdfs), ignore_index=True)
-    out, n_acc, tok_acc = _fold_batch(
-        key[0], batch, n_acc, tok_acc, langs, lambda _lang: None
-    )
+    out, n_acc, tok_acc = _fold_batch(key[0], batch, n_acc, tok_acc, langs)
     # None-safe sort: a nullable lang column puts None in the set, and
     # sorted() on a mixed None/str set raises TypeError on the
-    # executor — the fold itself and the TWS wiring both tolerate
-    # None, so the three row-identical surfaces must too (r7 advice)
+    # executor — the fold itself tolerates None, so the stream must
+    # too (r7 advice)
     state.update(
         (
             n_acc,
@@ -183,87 +150,6 @@ def admission_stream(docs: DataFrame) -> DataFrame:
         stateStructType=ADMIT_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wiring 2 (Spark 4 arbitrary-state v2): transformWithStateInPandas
-# ---------------------------------------------------------------------------
-
-_TOTALS_SCHEMA = StructType(
-    [
-        StructField("n_accepted", LongType()),
-        StructField("tok_accepted", LongType()),
-    ]
-)
-
-_LANG_KEY = StructType([StructField("lang", StringType())])
-_LANG_VAL = StructType([StructField("n", LongType())])
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-class AdmissionProcessor:
-    """transformWithState processor for the same greedy fold.
-
-    Deliberately duck-typed (same method surface as
-    ``pyspark.sql.streaming.stateful_processor.StatefulProcessor``)
-    rather than subclassing, so the class imports and unit-tests in
-    environments without the v2 runtime's protobuf dependency; Python
-    dispatch on the worker is duck-typed too.
-
-    State:
-      - ``totals``  (ValueState): (n_accepted, tok_accepted)
-      - ``by_lang`` (MapState):   (lang,) -> (admitted-doc count,)
-    """
-
-    def init(self, handle: Any) -> None:
-        self._totals = handle.getValueState("totals", _TOTALS_SCHEMA)
-        self._by_lang = handle.getMapState("by_lang", _LANG_KEY, _LANG_VAL)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n_acc, tok_acc = (
-            self._totals.get() if self._totals.exists() else (0, 0)
-        )
-        langs = {k[0] for k in self._by_lang.keys()}  # noqa: SIM118 (MapState)
-
-        def admit_lang(lang: str) -> None:
-            prev = (
-                self._by_lang.getValue((lang,))[0]
-                if self._by_lang.containsKey((lang,))
-                else 0
-            )
-            self._by_lang.updateValue((lang,), (prev + 1,))
-
-        batch = pd.concat(list(rows), ignore_index=True)
-        out, n_acc, tok_acc = _fold_batch(
-            key[0], batch, n_acc, tok_acc, langs, admit_lang
-        )
-        self._totals.update((n_acc, tok_acc))
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def admission_stream_tws(docs: DataFrame) -> DataFrame:
-    """transformWithStateInPandas wiring of the admission fold.
-
-    Requires (a) the RocksDB state store provider (the only provider
-    implementing v2 multi-variable state) and (b) the Python protobuf
-    package on driver and executors — see module docstring."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _P(AdmissionProcessor, StatefulProcessor):
-        pass
-
-    return docs.groupBy("source").transformWithStateInPandas(
-        statefulProcessor=_P(),
-        outputStructType=ADMIT_OUT,
-        outputMode="append",
-        timeMode="none",
     )
 
 

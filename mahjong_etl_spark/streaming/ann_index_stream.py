@@ -1,79 +1,102 @@
-"""Streaming IVF index maintenance: keep a persisted ANN index's
-inverted lists current as new vectors arrive.
+"""Streaming maintenance and admission for the persisted indexes: one
+micro-batch lifecycle, six per-family steps.
 
-Closes the index lifecycle the batch plane opened
-(operators/similarity.py): ``write_ivf_index`` trains the coarse
-quantizer and materializes (centroids, postings) once per corpus
-snapshot; THIS stream keeps the postings current between snapshot
-rebuilds — the production shape for a growing embedding corpus, where
-re-assigning the full corpus per arrival batch (or worse, retraining)
-is exactly the cost an inverted-file index exists to avoid.
+The batch plane (operators/similarity.py, operators/minhash_index.py)
+trains an index's frozen components — IVF centroids, PQ codebooks,
+IVFADC centroids + residual codebooks, MinHash banding geometry — and
+materializes its rows once per corpus snapshot.  The streams in this
+module keep those rows current between snapshot rebuilds, which is
+the production shape for a growing corpus: re-assigning the full
+corpus per arrival batch (or retraining) is exactly the cost an index
+exists to avoid.
 
-Per micro-batch of (vec_id, embedding) rows:
+ONE LIFECYCLE (``_run_index_stream``).  Every stream binds its
+checkpoint to the index epoch and mints its lineage once, starts the
+``foreachBatch`` writer once, and then runs each micro-batch the same
+way:
 
-- assign each vector to its nearest persisted centroid — the SAME
-  one-matmul-per-Arrow-batch pass the batch plane uses, against the
-  SAME centroids (read once per (session, index) and cached, so a
-  standing stream pays the centroid read exactly once);
-- append the (cluster, vec_id) rows into ``{index}/postings`` through
-  the SAME ``publish_batch`` the streaming ETL and the binaryFile
-  ingest use (partitioned by ``cluster`` instead of ``dt``) — one
-  copy of the effective-exactly-once delivery contract: a replayed
-  batch erases its own leftovers before re-moving files in, a
-  committed batch short-circuits on its marker, and a crash at any
-  point replays into the same final file set (the
-  erase-before-republish argument of streaming/etl_stream.py);
-- record one DRIFT row into ``{index}/_drift/rows/``: batch
-  size, mean residual distance to the assigned centroid, top-cell
-  occupancy share, and their ratios against the build-time baseline
-  ``write_ivf_index`` measured over the snapshot corpus.  Past the
-  thresholds below the row carries ``rebuild_recommended: true`` —
-  the retrain cadence becomes data-driven instead of calendar-driven
-  (r10 verdict item 3: the drift limit used to be prose; now it is a
-  number with a ledger behind it).
+1. the family STEP encodes or decides the batch, persisting what its
+   publishes and its drift row share (``_Batch.keep``);
+2. the rebuild fence re-verifies the bound epoch (``_check_epoch``)
+   BEFORE the first destination mutation;
+3. every publish the step lists — (marker suffix, tables,
+   ``part_col``) — goes through ``streaming/etl_stream.py::
+   publish_batch``, the one copy of the effective-exactly-once
+   contract (marker short-circuit, staged erase-before-republish,
+   marker after all tables).  Multi-table steps publish under several
+   batch-keyed markers (``{lineage}-{batch}`` plus ``-bands``,
+   ``-sh``, ``-vec``, ``-codes``, ``-adm``) because the tables
+   partition by different columns; each marker replays idempotently
+   on its own and the stream never advances past a batch whose later
+   publish failed;
+4. the step's DRIFT row lands in ``{index}/_drift/rows/`` AFTER the
+   last publish — the ledger is telemetry, not part of the
+   exactly-once contract, so a crash between publish and append loses
+   one ledger row, never an index row, and a replay rewrites the same
+   (lineage, batch)-named file;
+5. everything the step persisted is unpersisted in ``finally``, so a
+   fence refusal or a failed publish never leaks cached relations
+   across a crash/retry loop.
 
-Because the centroids are FROZEN between rebuilds, assignment is
-deterministic and the maintained index is BIT-IDENTICAL to a batch
-``write_ivf_index`` over the union corpus with the same centroids —
-pinned by tests/test_ann_index_stream.py, which serves queries from
-the maintained index and from a from-scratch rebuild and demands
-identical rows.
+THE STEPS.  ``run_ivf_maintenance_stream`` assigns arrivals to the
+frozen centroids and appends ``postings`` (``cluster=``);
+``run_pq_maintenance_stream`` PQ-encodes against the frozen codebooks
+into ``codes`` (``shard=``); ``run_ivfpq_maintenance_stream`` encodes
+IVFADC residuals into ``codes`` (``cluster=``) plus the optional raw
+``vectors``; ``run_minhash_maintenance_stream`` signs and bands
+documents into ``bands`` (``band=``) plus the optional ``shingles``.
+The two admission gates — ``run_neardup_admission_stream`` (MinHash)
+and ``run_semantic_admission_stream`` (IVFADC) — collapse exact
+in-batch copies, probe the index, decide each arrival, append the
+admitted ones (the gates are self-maintaining) and record every
+decision in ``admissions`` (``gate=admit/quarantine``).
 
-Rebuild fencing (r10 advice): replay idempotence of the publish
-assumes frozen centroids — if ``write_ivf_index`` rebuilds IN PLACE
-while a crashed (unmarked) maintenance batch is pending in the
-checkpoint, a restart would re-assign that batch against the NEW
-centroids and append vec_ids the rebuild already indexed.  Every
-rebuild therefore stamps a fresh random ``{index}/_index_epoch``; the
-maintenance stream binds its checkpoint to the epoch it first ran
-against (``{checkpoint}/_index_epoch_bound``) and REFUSES to start
-when they differ — an in-place rebuild requires a fresh checkpoint
-(and a drained or re-dropped arrival directory), and the failure is
-loud instead of a silent duplicate-append.
+Because the components are FROZEN between rebuilds, encoding is
+deterministic and a maintained index is BIT-IDENTICAL to a batch
+``write_*_index`` over the union corpus with the same components —
+pinned per family by tests/test_ann_index_stream.py and
+tests/test_minhash_index.py.
 
-Scale shape: per batch, one mapInPandas matmul over the batch's rows
-(no corpus scan, no shuffle — the cluster id IS the partition key of
-the write) plus one batch-sized aggregate for the drift row (driver
-traffic: a handful of scalars), state NONE (the index directory is
-the state).  At 100 TB the postings table is fact-scale but the
-stream only ever appends batch-sized slices; small posting files
-accumulate at one-per-(batch, cluster).  A snapshot rebuild clears
-them wholesale, but the measured curve (SCALE.md "postings
-small-file probe": the served query degrades ~linearly past ~1k
-files) says a standing stream cannot wait for the drift flag —
-``compact_postings`` below is the between-rebuilds answer, the
-generic manifest-journaled snapshot swap of plans/compaction.py
-applied to the ``cluster=`` layout.
+Rebuild fencing: replay idempotence assumes frozen components — if a
+``write_*_index`` rebuilds IN PLACE while a crashed (unmarked) batch
+is pending in the checkpoint, a restart would re-encode that batch
+against the NEW components and append ids the rebuild already
+indexed.  Every rebuild therefore stamps a fresh random
+``{index}/_index_epoch``; a stream binds its checkpoint to the epoch
+it first ran against (``{checkpoint}/_index_epoch_bound``), REFUSES
+to start when they differ, and re-checks before every publish.
+
+Drift: one ledger row per batch against the build-time baseline in
+``{index}/_drift/baseline.json`` — assignment residual and top-cell
+share (IVF), reconstruction error (PQ; IVFADC watches both axes),
+exact-duplicate rate (MinHash), admission flag rate (the gates; the
+semantic gate rates against its own trailing median).  Past the
+thresholds below a row carries ``rebuild_recommended: true``, so the
+retrain cadence is data-driven instead of calendar-driven.
+
+Scale shape: per batch, map-side encode passes over the batch's rows
+and batch-sized aggregates for the drift row (a handful of collected
+scalars); the index directory is the only state.  Small
+files accumulate at one per (batch, partition); ``compact_postings``
+(the manifest-journaled snapshot swap of plans/compaction.py) is the
+between-rebuilds answer, ``compact_recommended`` its signal, and
+``forget_from_index`` the derived-store half of a deletion request.
 """
 
 from __future__ import annotations
 
 import json
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .etl_stream import _lineage_id, _meta_fs, publish_batch
+from .etl_stream import (
+    _lineage_id,
+    _meta_fs,
+    publish_batch,
+    start_foreach_batch,
+)
 
 # Rebuild-recommended thresholds.  Residual ratio: mean distance of a
 # batch's vectors to their nearest frozen centroid, over the build-time
@@ -118,56 +141,60 @@ DRIFT_SCHEMA = (
     "rebuild_recommended boolean, ts_ms long"
 )
 
-# (applicationId, index_dir) -> centroid ndarray / baseline dict.
+# (applicationId, index_dir, artifact) -> a frozen index artifact: the
+# centroid matrix, the PQ codebooks, or the drift baseline dict.
 # Keyed by applicationId, not id(sc) (ids reuse after stop).  Landed
-# index snapshots are treated as immutable, and the one sanctioned way
-# to retrain in place — operators/similarity.py::write_ivf_index —
-# invalidates this cache for its path (invalidate_centroids below),
-# so a same-application rebuild is never assigned against stale
-# centroids.  An out-of-band overwrite from ANOTHER process remains
-# invisible to the cache but is caught by the epoch fence at the next
-# stream start.
-_CENTROID_CACHE: dict[tuple, object] = {}
-_BASELINE_CACHE: dict[tuple, dict] = {}
-_BOOKS_CACHE: dict[tuple, object] = {}
+# index snapshots are treated as immutable, and the sanctioned
+# rebuilds (the write_*_index functions) invalidate this memo for their
+# path (invalidate_centroids below), so a same-application rebuild is
+# never encoded against stale components.  An out-of-band overwrite
+# from ANOTHER process remains invisible to the memo but is caught by
+# the epoch fence at the next stream start.
+_INDEX_MEMO: dict[tuple, object] = {}
+_CENTROID_CACHE = _INDEX_MEMO  # alias: callers clear the memo by this name
 
 
 def invalidate_centroids(index_dir: str) -> None:
-    """Drop every cached centroid matrix / PQ codebook / drift
-    baseline for ``index_dir`` (called by write_ivf_index and
-    write_pq_index on rewrite, any app)."""
-    for cache in (_CENTROID_CACHE, _BASELINE_CACHE, _BOOKS_CACHE):
-        for key in [k for k in cache if k[1] == index_dir]:
-            del cache[key]
+    """Drop every memoized artifact (centroids, codebooks, drift
+    baseline) for ``index_dir`` (called by every ``write_*_index``
+    rebuild, any app)."""
+    for key in [k for k in _INDEX_MEMO if k[1] == index_dir]:
+        del _INDEX_MEMO[key]
 
 
-def _index_centroids(spark: SparkSession, index_dir: str):
+def _memo(spark: SparkSession, index_dir: str, artifact: str, load):
+    key = (spark.sparkContext.applicationId, index_dir, artifact)
+    if key not in _INDEX_MEMO:
+        _INDEX_MEMO[key] = load()
+    return _INDEX_MEMO[key]
+
+
+def _index_array(spark: SparkSession, index_dir: str, artifact: str):
+    """The ``centroids`` or ``codebooks`` ndarray of a persisted
+    index, read once per (application, index)."""
     from ..operators.similarity import _read_ndarray
 
-    key = (spark.sparkContext.applicationId, index_dir)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is None:
-        hit = _read_ndarray(spark, f"{index_dir}/centroids")
-        _CENTROID_CACHE[key] = hit
-    return hit
+    return _memo(
+        spark,
+        index_dir,
+        artifact,
+        lambda: _read_ndarray(spark, f"{index_dir}/{artifact}"),
+    )
 
 
 def _index_baseline(spark: SparkSession, index_dir: str) -> dict:
-    """Build-time drift baseline (written by write_ivf_index); a
-    legacy index without one gets an empty dict — drift rows then
-    carry null ratios and never flag."""
-    key = (spark.sparkContext.applicationId, index_dir)
-    hit = _BASELINE_CACHE.get(key)
-    if hit is None:
+    """Build-time drift baseline (written by every ``write_*_index``
+    rebuild); a legacy index without one gets an empty dict — drift
+    rows then carry null ratios and never flag on a ratio."""
+
+    def load() -> dict:
         fs = _meta_fs(spark, index_dir)
         p = f"{fs.root}/_drift/baseline.json"
-        hit = (
-            json.loads(fs.read_bytes(p).decode())
-            if fs.kind(p) == "file"
-            else {}
-        )
-        _BASELINE_CACHE[key] = hit
-    return hit
+        if fs.kind(p) != "file":
+            return {}
+        return json.loads(fs.read_bytes(p).decode())
+
+    return _memo(spark, index_dir, "baseline", load)
 
 
 def assign_batch(
@@ -177,7 +204,7 @@ def assign_batch(
     assigned against the persisted index's frozen centroids."""
     from ..operators.similarity import _assign_clusters, with_norm
 
-    cents = _index_centroids(spark, index_dir)
+    cents = _index_array(spark, index_dir, "centroids")
     return _assign_clusters(with_norm(vectors), cents).select(
         "cluster", "vec_id"
     )
@@ -243,55 +270,93 @@ def _check_epoch(spark: SparkSession, index_dir: str, bound: str) -> None:
         )
 
 
-def _drift_row(
-    spark: SparkSession, assigned_res: DataFrame, index_dir: str, batch_id: int
+def _ratio(value: float, base, n: int):
+    """``value`` over its build-time ``base``; None for an empty batch
+    or a missing/zero base (legacy index, dup-free build corpus)."""
+    return (value / base) if (n and base and base > 0) else None
+
+
+def _round6(x):
+    return round(x, 6) if x is not None else None
+
+
+def _drift_row(n: int, value: float, base, flag, **fields) -> dict:
+    """One ledger row (``DRIFT_SCHEMA`` minus ``batch_id``/``ts_ms``,
+    which ``_run_index_stream`` and ``_append_drift`` add): the batch's drift
+    ``value`` (``mean_residual``), its build-time ``base``
+    (``baseline_residual``) and their ratio.  ``flag(ratio)`` decides
+    ``rebuild_recommended``; batches smaller than DRIFT_MIN_BATCH never
+    flag.  ``fields`` sets the family-specific columns."""
+    ratio = _ratio(value, base, n)
+    return {
+        "n": n,
+        "cells_touched": None,
+        "top_cell_share": None,
+        "mean_residual": round(value, 6),
+        "baseline_residual": base,
+        "residual_ratio": _round6(ratio),
+        "rebuild_recommended": bool(n >= DRIFT_MIN_BATCH and flag(ratio)),
+        **fields,
+    }
+
+
+def _rate_drift_row(
+    n: int,
+    rate: float,
+    base,
+    min_rate: float = MINHASH_DRIFT_MIN_DUP_RATE,
+    ratio_bar: float = MINHASH_DRIFT_DUP_RATE_RATIO,
 ) -> dict:
-    """One ledger row from a batch's (cluster, vec_id, res2) rows —
-    a k-bounded aggregate, driver traffic a handful of scalars."""
-    occ = assigned_res.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.sqrt("res2")).alias("sres"),
+    """Drift row for a RATE (dup rate, admission flag rate) under the
+    two-bar rule: flag when the rate is BOTH material in absolute terms
+    AND a multiple of the base rate (either bar alone misfires; with no
+    usable base the absolute bar decides alone)."""
+    return _drift_row(
+        n,
+        rate,
+        base,
+        lambda _ratio: rate > min_rate
+        and (base is None or base == 0 or rate > ratio_bar * base),
     )
-    (row,) = occ.agg(
-        F.sum("n").alias("n"),
-        F.max("n").alias("max_cell"),
-        F.count(F.lit(1)).alias("cells"),
-        F.sum("sres").alias("sres"),
-    ).collect()
+
+
+def _ivf_drift_row(
+    spark: SparkSession, ares: DataFrame, index_dir: str
+) -> dict:
+    """Drift row from a batch's (cluster, vec_id, res2) assignment:
+    mean residual distance against the build-time residual, and the
+    top-cell share against a bar RELATIVE to the build-time skew where
+    known — a corpus whose own clustering is lopsided must not flag on
+    arrivals drawn from its own distribution, only on arrivals
+    measurably MORE concentrated than the codebook was trained for."""
+    from ..operators.similarity import assignment_stats
+
+    row = assignment_stats(ares)
     n = row.n or 0
-    mean_res = (row.sres / n) if n else 0.0
     top_share = (row.max_cell / n) if n else 0.0
     base = _index_baseline(spark, index_dir)
-    base_res = base.get("mean_residual")
-    ratio = (
-        (mean_res / base_res)
-        if (base_res and base_res > 0 and n)
-        else None
-    )
-    # the top-cell bar is RELATIVE to the build-time skew where known:
-    # a corpus whose own clustering is lopsided must not flag on
-    # arrivals drawn from its own distribution — only on arrivals
-    # measurably MORE concentrated than the codebook was trained for
     top_bar = max(
         DRIFT_TOP_CELL_SHARE, 2.0 * (base.get("top_cell_share") or 0.0)
     )
-    flag = bool(
-        n >= DRIFT_MIN_BATCH
-        and (
-            (ratio is not None and ratio > DRIFT_RESIDUAL_RATIO)
-            or top_share > top_bar
-        )
+    return _drift_row(
+        n,
+        (row.sres / n) if n else 0.0,
+        base.get("mean_residual"),
+        lambda ratio: (ratio is not None and ratio > DRIFT_RESIDUAL_RATIO)
+        or top_share > top_bar,
+        cells_touched=row.cells if n else 0,
+        top_cell_share=round(top_share, 6),
     )
-    return {
-        "batch_id": batch_id,
-        "n": n,
-        "cells_touched": row.cells if n else 0,
-        "top_cell_share": round(top_share, 6),
-        "mean_residual": round(mean_res, 6),
-        "baseline_residual": base_res,
-        "residual_ratio": round(ratio, 6) if ratio is not None else None,
-        "rebuild_recommended": flag,
-    }
+
+
+def _flag_rate(decisions: DataFrame) -> tuple[int, float]:
+    """(n, share of decisions NOT admitted) — the gates' drift value."""
+    (row,) = decisions.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("admitted"), 0).otherwise(1)).alias("flagged"),
+    ).collect()
+    n = row.n or 0
+    return n, ((row.flagged or 0) / n) if n else 0.0
 
 
 # ledger retention: the rebuild decision reads recent batches, so the
@@ -357,20 +422,47 @@ def _append_drift(
 
 def reset_drift_ledger(fs) -> None:
     """Clear the per-row drift ledger (every layout) at index REBUILD
-    time — called by all four ``write_*_index`` builders alongside
-    their ``_batch_commits`` clear (r13 ADVICE): the ledger's rows
+    time (``mark_index_rebuilt``, r13 ADVICE): the ledger's rows
     describe the PRE-rebuild index, so ``rebuild_recommended``
     reporting a stale last-row verdict immediately after the rebuild
-    that was supposed to address it is exactly the confusion a
-    rebuild must clear.  The builder rewrites ``_drift/baseline.json``
-    right after, so the drift plane restarts from the fresh
-    snapshot's reference with an empty history."""
+    that was supposed to address it is exactly the confusion a rebuild
+    must clear.  The rebuild rewrites ``_drift/baseline.json`` right
+    after, so the drift plane restarts from the fresh snapshot's
+    reference with an empty history."""
     rows_dir = f"{fs.root}/_drift/rows"
     if fs.kind(rows_dir) == "dir":
         fs.delete_dir(rows_dir)
     legacy = f"{fs.root}/_drift/ledger.jsonl"
     if fs.kind(legacy) == "file":
         fs.delete_file(legacy)
+
+
+def mark_index_rebuilt(spark: SparkSession, index_dir: str):
+    """Rebuild bookkeeping shared by every ``write_*_index`` function,
+    run as soon as a rebuild's rows have landed: the memoized
+    components are dropped (``invalidate_centroids``), the pre-rebuild
+    lineage's commit markers and drift ledger are cleared, and a fresh
+    random ``_index_epoch`` fences every checkpoint bound to the old
+    snapshot (module docstring).  Returns the index's metadata FS."""
+    import uuid
+
+    invalidate_centroids(index_dir)
+    fs = _meta_fs(spark, index_dir)
+    if fs.kind(f"{fs.root}/_batch_commits") is not None:
+        fs.delete_dir(f"{fs.root}/_batch_commits")
+    reset_drift_ledger(fs)
+    fs.write_bytes(f"{fs.root}/_index_epoch", uuid.uuid4().hex.encode())
+    return fs
+
+
+def write_drift_baseline(fs, baseline: dict) -> None:
+    """Record a rebuild's build-time drift reference
+    (``_drift/baseline.json``), which the stream drift rows compare
+    against."""
+    fs.mkdirs(f"{fs.root}/_drift")
+    fs.write_bytes(
+        f"{fs.root}/_drift/baseline.json", json.dumps(baseline).encode()
+    )
 
 
 def _drift_row_files(fs) -> list[str]:
@@ -704,6 +796,81 @@ def forget_from_index(
     return report
 
 
+class _Batch(NamedTuple):
+    """What a family step sees of one micro-batch.  ``keep(df)``
+    persists ``df`` until the batch ends (the lifecycle unpersists in
+    ``finally``) and returns it."""
+
+    session: SparkSession
+    df: DataFrame
+    batch_id: int
+    lineage: str
+    keep: Callable[[DataFrame], DataFrame]
+
+
+def _run_index_stream(
+    spark: SparkSession,
+    stream: DataFrame,
+    index_dir: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    step: Callable[[_Batch], tuple],
+):
+    """Start the one index/admission micro-batch lifecycle (module
+    docstring): epoch bind + lineage once, then per batch step → fence
+    → publishes → drift row, unpersisting in ``finally``.
+
+    ``step(batch)`` returns (publishes, drift): ``publishes`` lists
+    (marker suffix, {table: DataFrame}, part_col) in publish order, and
+    ``drift()`` returns the batch's ledger row (``_drift_row``) — it is
+    called only after every publish landed."""
+    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
+    lineage = _lineage_id(spark, checkpoint_dir)
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
+        kept: list[DataFrame] = []
+
+        def keep(df: DataFrame) -> DataFrame:
+            kept.append(df.persist())
+            return df
+
+        try:
+            publishes, drift = step(
+                _Batch(session, batch_df, batch_id, lineage, keep)
+            )
+            _check_epoch(session, index_dir, bound_epoch)
+            for suffix, tables, part_col in publishes:
+                publish_batch(
+                    session,
+                    index_dir,
+                    f"{lineage}-{batch_id}{suffix}",
+                    tables,
+                    part_col=part_col,
+                )
+            _append_drift(
+                session,
+                index_dir,
+                {"batch_id": batch_id, **drift()},
+                lineage=lineage,
+            )
+        finally:
+            for df in kept:
+                df.unpersist()
+
+    return start_foreach_batch(
+        stream, run_batch, checkpoint_dir, available_now
+    )
+
+
+def _has_relation(spark: SparkSession, index_dir: str, name: str) -> bool:
+    """Whether the index carries the optional ``name`` relation —
+    decided once at stream start (a relation never appears
+    mid-stream)."""
+    fs = _meta_fs(spark, index_dir)
+    return fs.kind(f"{fs.root}/{name}") == "dir"
+
+
 def run_ivf_maintenance_stream(
     spark: SparkSession,
     vectors_stream: DataFrame,
@@ -711,77 +878,29 @@ def run_ivf_maintenance_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Start (and return) the standing index-maintenance query.
+    """Start (and return) the IVF index-maintenance query.
 
     ``vectors_stream`` must carry ``vec_id`` and ``embedding``
-    (array<float/double>) — the same columns the batch index builder
-    reads."""
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
+    (array<float/double>) — the same columns ``write_ivf_index``
+    reads.  Step: assign each arrival to its nearest frozen centroid
+    (the batch plane's one-matmul-per-Arrow-batch pass, which also
+    yields the residual the drift row needs) and append the (cluster,
+    vec_id) rows into ``postings`` (``cluster=``); drift is the mean
+    residual and top-cell share against the build-time baseline."""
+    from ..operators.similarity import _assign_clusters_res, with_norm
 
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.similarity import _assign_clusters_res, with_norm
+    def step(b: _Batch):
+        cents = _index_array(b.session, index_dir, "centroids")
+        # one assignment pass serves the publish and the drift row
+        ares = b.keep(_assign_clusters_res(with_norm(b.df), cents))
+        return (
+            [("", {"postings": ares.select("cluster", "vec_id")}, "cluster")],
+            lambda: _ivf_drift_row(b.session, ares, index_dir),
+        )
 
-        session = batch_df.sparkSession
-        cents = _index_centroids(session, index_dir)
-        ares = _assign_clusters_res(with_norm(batch_df), cents)
-        # batch-sized; persisted so the publish and the drift
-        # aggregate share one assignment pass
-        ares.persist()
-        try:
-            # live half of the rebuild fence: re-verify the bound
-            # epoch immediately before the first destination mutation
-            _check_epoch(session, index_dir, bound_epoch)
-            # the shared replay-idempotent publish (marker
-            # short-circuit, staged erase-before-republish,
-            # marker-after-all-tables) — one copy of the exactly-once
-            # contract for ETL, ingest and this stream
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}",
-                {"postings": ares.select("cluster", "vec_id")},
-                part_col="cluster",
-            )
-            # drift row AFTER the publish: the ledger is operational
-            # telemetry, not part of the exactly-once contract — a
-            # crash between publish and append loses one ledger row,
-            # never a posting (and a replay rewrites the same
-            # (lineage, batch_id)-named row file — no duplicate)
-            _append_drift(
-                session,
-                index_dir,
-                _drift_row(session, ares, index_dir, batch_id),
-                lineage=lineage,
-            )
-        finally:
-            ares.unpersist()
-
-    writer = (
-        vectors_stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_index_stream(
+        spark, vectors_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# PQ index maintenance (r12): the second index family on the same
-# lifecycle — frozen codebooks between rebuilds, batch-keyed
-# replay-idempotent code appends, epoch fencing, drift ledger.
-# ---------------------------------------------------------------------------
-
-
-def _index_books(spark: SparkSession, index_dir: str):
-    from ..operators.similarity import _read_ndarray
-
-    key = (spark.sparkContext.applicationId, index_dir)
-    hit = _BOOKS_CACHE.get(key)
-    if hit is None:
-        hit = _read_ndarray(spark, f"{index_dir}/codebooks")
-        _BOOKS_CACHE[key] = hit
-    return hit
 
 
 def run_pq_maintenance_stream(
@@ -792,108 +911,48 @@ def run_pq_maintenance_stream(
     available_now: bool = True,
 ):
     """Keep a persisted PQ index's code table current as new vectors
-    arrive — the PQ twin of :func:`run_ivf_maintenance_stream`, and
-    deliberately the SAME machinery end to end:
+    arrive — the PQ twin of :func:`run_ivf_maintenance_stream`.
 
-    - per micro-batch, the arrivals are PQ-encoded against the
-      persisted index's FROZEN codebooks (read once per (session,
-      index), cache busted by write_pq_index's sanctioned rewrite)
-      and appended into the ``{index}/codes`` ``shard=`` layout
-      through ``publish_batch`` — the one copy of the
-      effective-exactly-once contract;
-    - the checkpoint is fenced to the index epoch at start AND the
-      bound epoch is re-verified before every publish, so an in-place
-      retrain under a live or crashed stream refuses loudly instead
-      of appending codes the rebuild already encoded;
-    - one drift row per batch: the batch's mean RECONSTRUCTION error
-      (operators/similarity.py::pq_recon_partials) against the
-      build-time baseline — codebooks that can no longer represent
-      the arriving distribution show a rising ratio exactly like IVF
-      centroids do, and ``rebuild_recommended``/``read_drift``/the
-      CLI ``index`` summary work on a PQ index unchanged.
+    Step: PQ-encode the arrivals against the FROZEN codebooks and
+    append them into ``codes`` (``shard = vec_id mod
+    PQ_CODE_SHARDS``).  Drift: the batch's mean RECONSTRUCTION error
+    (operators/similarity.py::pq_recon_partials) against the
+    build-time baseline, flagged past ``PQ_DRIFT_RECON_RATIO`` —
+    codebooks that can no longer represent the arriving distribution
+    show a rising ratio exactly like IVF centroids do.  The maintained
+    code table is bit-identical to a batch ``write_pq_index`` over the
+    union corpus with the same books (tests/test_ann_index_stream.py::
+    test_pq_maintained_index_matches_batch_rebuild)."""
+    from ..operators.similarity import (
+        PQ_CODE_SHARDS,
+        pq_encode,
+        pq_mean_recon,
+        with_norm,
+    )
 
-    Because the codebooks are frozen, encoding is deterministic and
-    the maintained code table is BIT-IDENTICAL to a batch
-    ``write_pq_index`` over the union corpus with the same books —
-    pinned by tests/test_ann_index_stream.py::
-    test_pq_maintained_index_matches_batch_rebuild."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
-
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.similarity import (
-            PQ_CODE_SHARDS,
-            pq_encode,
-            pq_recon_partials,
-            with_norm,
+    def step(b: _Batch):
+        books = _index_array(b.session, index_dir, "codebooks")
+        vecs = b.keep(with_norm(b.df))
+        codes = pq_encode(vecs, books).withColumn(
+            "shard",
+            F.pmod(F.col("vec_id"), F.lit(PQ_CODE_SHARDS)).cast("int"),
         )
 
-        session = batch_df.sparkSession
-        books = _index_books(session, index_dir)
-        vecs = with_norm(batch_df).persist()
-        try:
-            codes = pq_encode(vecs, books).withColumn(
-                "shard",
-                F.pmod(F.col("vec_id"), F.lit(PQ_CODE_SHARDS)).cast("int"),
+        def drift() -> dict:
+            n, mean_recon = pq_mean_recon(vecs, books)
+            return _drift_row(
+                n,
+                mean_recon,
+                _index_baseline(b.session, index_dir).get("mean_residual"),
+                lambda ratio: ratio is not None
+                and ratio > PQ_DRIFT_RECON_RATIO,
             )
-            _check_epoch(session, index_dir, bound_epoch)
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}",
-                {"codes": codes},
-                part_col="shard",
-            )
-            # drift row AFTER the publish (telemetry, not part of the
-            # exactly-once contract — same argument as the IVF stream)
-            (row,) = (
-                pq_recon_partials(vecs, books)
-                .agg(F.sum("n").alias("n"), F.sum("serr").alias("serr"))
-                .collect()
-            )
-            n = row.n or 0
-            mean_res = (row.serr / n) if n else 0.0
-            base = _index_baseline(session, index_dir)
-            base_res = base.get("mean_residual")
-            ratio = (
-                (mean_res / base_res)
-                if (base_res and base_res > 0 and n)
-                else None
-            )
-            flag = bool(
-                n >= DRIFT_MIN_BATCH
-                and ratio is not None
-                and ratio > PQ_DRIFT_RECON_RATIO
-            )
-            _append_drift(
-                session,
-                index_dir,
-                {
-                    "batch_id": batch_id,
-                    "n": n,
-                    "cells_touched": None,
-                    "top_cell_share": None,
-                    "mean_residual": round(mean_res, 6),
-                    "baseline_residual": base_res,
-                    "residual_ratio": (
-                        round(ratio, 6) if ratio is not None else None
-                    ),
-                    "rebuild_recommended": flag,
-                },
-                lineage=lineage,
-            )
-        finally:
-            vecs.unpersist()
 
-    writer = (
-        vectors_stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
+        return [("", {"codes": codes}, "shard")], drift
+
+    return _run_index_stream(
+        spark, vectors_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_ivfpq_maintenance_stream(
@@ -903,148 +962,76 @@ def run_ivfpq_maintenance_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Keep a persisted IVFADC index current as new vectors arrive —
-    the third family on the shared lifecycle.  Per micro-batch the
-    arrivals are unit-normalized, assigned against the FROZEN coarse
-    centroids, their residuals PQ-encoded against the FROZEN
-    codebooks, and the (cluster, vec_id, code) rows appended into the
-    ``{index}/codes`` ``cluster=`` layout through ``publish_batch``.
-    Same epoch fencing (start + per-batch); the drift row watches
-    BOTH staleness axes (r12 verdict item 5): the COARSE quantizer's
+    """Keep a persisted IVFADC index current as new vectors arrive.
+
+    Step: unit-normalize the arrivals, assign them against the FROZEN
+    coarse centroids, PQ-encode their residuals against the FROZEN
+    codebooks and append the (cluster, vec_id, code) rows into
+    ``codes`` (``cluster=``).  When the index carries the persisted
+    exact-verify relation (``{index}/vectors``, a ``with_vectors=True``
+    build), the arrivals' raw vectors are appended there first under a
+    ``-vec`` marker — vectors before codes, the semantic gate's
+    crash-window order.
+
+    The drift row watches BOTH staleness axes: the COARSE quantizer's
     assignment residual + top-cell occupancy under the IVF thresholds
     (stale cells degrade probe recall and residual coding alike), AND
-    the batch's PQ reconstruction-error ratio over the residual
-    coding under ``PQ_DRIFT_RECON_RATIO`` — a shift that keeps cell
-    geometry while rotating within-cell structure books-stales the
-    ADC tables without moving the coarse signal.
+    the PQ reconstruction-error ratio of the residual coding
+    (``recon_ratio``) under ``PQ_DRIFT_RECON_RATIO`` — a shift that
+    keeps cell geometry while rotating within-cell structure
+    books-stales the ADC tables without moving the coarse signal, so
+    either axis alone may flip the flag.  The maintained code table is
+    bit-identical to a batch ``write_ivfpq_index`` over the union
+    corpus with the same components."""
+    from ..operators.similarity import (
+        _assign_clusters_res,
+        _unit_corpus,
+        _vector_table,
+        ivfpq_residuals,
+        pq_encode,
+        pq_mean_recon,
+        with_norm,
+    )
 
-    Frozen centroids + frozen books ⇒ deterministic encoding ⇒ the
-    maintained code table is BIT-IDENTICAL to a batch
-    ``write_ivfpq_index`` over the union corpus with the same
-    components — pinned by tests/test_ann_index_stream.py.  When the
-    index carries the persisted exact-verify relation
-    (``{index}/vectors``, r14 ``with_vectors=True`` build), arrivals'
-    raw vectors are appended there too under a second ``…-vec``
-    marker — the minhash shingle-append contract on the embedding
-    plane."""
-    from pyspark.sql import functions as F  # noqa: F811
+    has_vec = _has_relation(spark, index_dir, "vectors")
 
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
-    _vfs = _meta_fs(spark, index_dir)
-    has_vec = _vfs.kind(f"{_vfs.root}/vectors") == "dir"
-
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.similarity import (
-            _assign_clusters_res,
-            _unit_corpus,
-            pq_encode,
-            pq_recon_partials,
-            with_norm,
+    def step(b: _Batch):
+        cents = _index_array(b.session, index_dir, "centroids")
+        books = _index_array(b.session, index_dir, "codebooks")
+        cn = _unit_corpus(with_norm(b.df))
+        # one assignment pass serves the publish AND the drift row;
+        # the residuals serve the encode AND the recon drift axis
+        ares = b.keep(_assign_clusters_res(cn, cents))
+        res = b.keep(ivfpq_residuals(b.session, cn, ares, cents))
+        coded = (
+            pq_encode(res, books)
+            .join(ares.select("vec_id", "cluster"), "vec_id")
+            .select("cluster", "vec_id", "code")
         )
-        from ..session import local_rows_df
+        publishes = [("", {"codes": coded}, "cluster")]
+        if has_vec:
+            vectors = _vector_table(b.df.select("vec_id", "embedding"))
+            publishes.insert(0, ("-vec", {"vectors": vectors}, "shard"))
 
-        session = batch_df.sparkSession
-        cents = _index_centroids(session, index_dir)
-        books = _index_books(session, index_dir)
-        cn = _unit_corpus(with_norm(batch_df))
-        # one assignment pass serves the publish AND the drift row
-        ares = _assign_clusters_res(cn, cents).persist()
-        res = None
-        try:
-            cent_df = local_rows_df(
-                session,
-                [
-                    (int(i), [float(v) for v in cents[i]])
-                    for i in range(len(cents))
-                ],
-                "cluster int, carr array<double>",
-            )
-            res = (
-                cn.join(ares.select("vec_id", "cluster"), "vec_id")
-                .join(F.broadcast(cent_df), "cluster")
-                .select(
-                    "vec_id",
-                    "cluster",
-                    F.zip_with(
-                        "emb_d", "carr", lambda x, c: x - c
-                    ).alias("emb_d"),
-                    F.lit(1.0).alias("norm"),
-                )
-            ).persist()  # serves the encode AND the recon drift axis
-            coded = (
-                pq_encode(res, books)
-                .join(ares.select("vec_id", "cluster"), "vec_id")
-                .select("cluster", "vec_id", "code")
-            )
-            _check_epoch(session, index_dir, bound_epoch)
-            # vectors before codes — the gate's crash-window argument
-            if has_vec:
-                from ..operators.similarity import _vector_table
-
-                publish_batch(
-                    session,
-                    index_dir,
-                    f"{lineage}-{batch_id}-vec",
-                    {
-                        "vectors": _vector_table(
-                            batch_df.select("vec_id", "embedding")
-                        )
-                    },
-                    part_col="shard",
-                )
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}",
-                {"codes": coded},
-                part_col="cluster",
-            )
-            # drift row carries BOTH staleness axes (r12 verdict item
-            # 5): the coarse-assignment residual/occupancy (cells
-            # stale) from _drift_row, plus the batch's PQ
-            # reconstruction-error ratio over the RESIDUAL coding
-            # (books stale) — a shift that keeps cell geometry while
-            # rotating within-cell structure degrades ADC precision
-            # without moving the coarse signal, so either axis alone
-            # may flip the flag.
-            row = _drift_row(session, ares, index_dir, batch_id)
-            (rr,) = (
-                pq_recon_partials(res, books)
-                .agg(F.sum("n").alias("n"), F.sum("serr").alias("serr"))
-                .collect()
-            )
-            nrec = rr.n or 0
-            base_recon = _index_baseline(session, index_dir).get(
-                "mean_recon"
-            )
-            rratio = (
-                ((rr.serr / nrec) / base_recon)
-                if (nrec and base_recon and base_recon > 0)
-                else None
-            )
-            row["recon_ratio"] = (
-                round(rratio, 6) if rratio is not None else None
-            )
+        def drift() -> dict:
+            row = _ivf_drift_row(b.session, ares, index_dir)
+            n, mean_recon = pq_mean_recon(res, books)
+            base = _index_baseline(b.session, index_dir).get("mean_recon")
+            ratio = _ratio(mean_recon, base, n)
+            row["recon_ratio"] = _round6(ratio)
             if (
-                rratio is not None
-                and nrec >= DRIFT_MIN_BATCH
-                and rratio > PQ_DRIFT_RECON_RATIO
+                n >= DRIFT_MIN_BATCH
+                and ratio is not None
+                and ratio > PQ_DRIFT_RECON_RATIO
             ):
                 row["rebuild_recommended"] = True
-            _append_drift(session, index_dir, row, lineage=lineage)
-        finally:
-            ares.unpersist()
-            if res is not None:
-                res.unpersist()
+            return row
 
-    writer = (
-        vectors_stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
+        return publishes, drift
+
+    return _run_index_stream(
+        spark, vectors_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_minhash_maintenance_stream(
@@ -1056,128 +1043,137 @@ def run_minhash_maintenance_stream(
 ):
     """Keep a persisted MinHash band index's postings current as new
     documents arrive — the dedup plane on the same lifecycle as the
-    three ANN families (r13).  ``docs_stream`` carries (doc_id, text).
+    three ANN families.  ``docs_stream`` carries (doc_id, text).
 
-    Per micro-batch: the arrivals are signed with the SAME vectorized
-    signature pass and banded with the SAME band-slice hash the batch
-    builder and the pair path use (operators/dedup.py::
-    minhash_signatures + band_rows — signatures are seed-fixed and
-    deterministic, so the maintained postings are BIT-IDENTICAL to a
-    batch ``write_minhash_index`` over the union corpus), appended
-    into the ``{index}/bands`` ``band=`` layout through
-    ``publish_batch`` (the one exactly-once contract), behind the
-    same start-time + per-batch epoch fence.  When the index carries
-    the persisted VERIFY relation (``{index}/shingles``, the r14
-    default build), the arrivals' shingle rows are appended there too
-    under a second batch-keyed marker (``…-sh``) — each marker
-    replays idempotently on its own, and the stream never advances
-    past a batch whose second publish failed (the admission gate's
-    two-marker argument); a reader in the crash window between the
-    two sees bands without shingles, which every verify consumer
-    treats as "fall back to band hits", never as admitted.
+    Step: sign the arrivals with the SAME vectorized signature pass and
+    band them with the SAME band-slice hash the batch build and the
+    pair path use (operators/dedup.py::minhash_signatures + band_rows
+    — seed-fixed and deterministic, so the maintained postings are
+    BIT-IDENTICAL to a batch ``write_minhash_index`` over the union
+    corpus), with the INDEX's recorded build geometry, and append them
+    into ``bands`` (``band=``).  When the index carries the persisted
+    VERIFY relation (``{index}/shingles``), the arrivals' shingle rows
+    are appended there too under a second ``-sh`` marker; a reader in
+    the crash window between the two sees bands without shingles,
+    which every verify consumer treats as "fall back to band hits",
+    never as admitted.
 
-    The drift row watches the signal that actually stales an LSH
-    index: the batch's EXACT-DUPLICATE RATE vs the build-time corpus
-    rate (constants above).  Field mapping onto the shared ledger
-    schema: ``mean_residual`` = batch dup rate, ``baseline_residual``
-    = build-time rate, ``residual_ratio`` = their ratio (null when
-    the build corpus was dup-free) — ``read_drift`` /
-    ``rebuild_recommended`` / ``compact_recommended`` / the CLI
-    ``index --kind minhash`` face work unchanged."""
+    Drift watches the signal that actually stales an LSH index: the
+    batch's EXACT-DUPLICATE RATE vs the build-time corpus rate (the
+    two-bar rule, constants above).  Field mapping onto the shared
+    ledger schema: ``mean_residual`` = batch dup rate,
+    ``baseline_residual`` = build-time rate, ``residual_ratio`` =
+    their ratio (null when the build corpus was dup-free)."""
     from ..operators.dedup import band_rows, minhash_signatures
     from ..operators.minhash_index import (
         _shingle_table,
         read_minhash_geometry,
     )
 
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
-    # band with the INDEX's build geometry (recorded by
-    # write_minhash_index): hardcoding the defaults would make a
-    # non-default index silently un-probeable (r13 review finding)
+    # band with the INDEX's build geometry: hardcoding the defaults
+    # would make a non-default index silently un-probeable
     geo = read_minhash_geometry(spark, index_dir)
-    # a bands-only / pre-r14 index never grows a shingles relation
-    # mid-stream — decided once at start, like the geometry
-    has_sh = (
-        _meta_fs(spark, index_dir).kind(
-            f"{_meta_fs(spark, index_dir).root}/shingles"
-        )
-        == "dir"
-    )
+    has_sh = _has_relation(spark, index_dir, "shingles")
 
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        docs = batch_df.select("doc_id", "text").persist()
-        try:
-            rows = band_rows(
-                minhash_signatures(
-                    docs, geo["n"], geo["bands"] * geo["rows_per_band"]
-                ),
-                geo["bands"],
-                geo["rows_per_band"],
-            )
-            _check_epoch(session, index_dir, bound_epoch)
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}",
-                {"bands": rows},
-                part_col="band",
-            )
-            if has_sh:
-                publish_batch(
-                    session,
-                    index_dir,
-                    f"{lineage}-{batch_id}-sh",
-                    {"shingles": _shingle_table(docs, geo["n"])},
-                    part_col="shard",
-                )
-            # drift row AFTER the publish (telemetry, same contract
-            # as the other families): one batch-sized aggregate
+    def step(b: _Batch):
+        docs = b.keep(b.df.select("doc_id", "text"))
+        rows = band_rows(
+            minhash_signatures(
+                docs, geo["n"], geo["bands"] * geo["rows_per_band"]
+            ),
+            geo["bands"],
+            geo["rows_per_band"],
+        )
+        publishes = [("", {"bands": rows}, "band")]
+        if has_sh:
+            shingles = _shingle_table(docs, geo["n"])
+            publishes.append(("-sh", {"shingles": shingles}, "shard"))
+
+        def drift() -> dict:
             (srow,) = docs.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.xxhash64("text")).alias("n_texts"),
             ).collect()
             n = srow.n or 0
             rate = ((n - (srow.n_texts or 0)) / n) if n else 0.0
-            base = _index_baseline(session, index_dir).get("dup_rate")
-            ratio = (rate / base) if (base and base > 0) else None
-            flag = bool(
-                n >= DRIFT_MIN_BATCH
-                and rate > MINHASH_DRIFT_MIN_DUP_RATE
-                and (
-                    base is None
-                    or base == 0
-                    or rate > MINHASH_DRIFT_DUP_RATE_RATIO * base
-                )
-            )
-            _append_drift(
-                session,
-                index_dir,
-                {
-                    "batch_id": batch_id,
-                    "n": n,
-                    "cells_touched": None,
-                    "top_cell_share": None,
-                    "mean_residual": round(rate, 6),
-                    "baseline_residual": base,
-                    "residual_ratio": (
-                        round(ratio, 6) if ratio is not None else None
-                    ),
-                    "rebuild_recommended": flag,
-                },
-                lineage=lineage,
-            )
-        finally:
-            docs.unpersist()
+            base = _index_baseline(b.session, index_dir).get("dup_rate")
+            return _rate_drift_row(n, rate, base)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
+        return publishes, drift
+
+    return _run_index_stream(
+        spark, docs_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _collapse_exact(
+    batch: DataFrame, id_col: str, key, score, sim: str, keep
+) -> tuple[DataFrame, DataFrame]:
+    """Within-batch exact collapse shared by the admission gates: one
+    rep (min ``id_col``) per ``key`` value.  Returns (reps, copies):
+    ``reps`` are the batch rows that go on to probe the index
+    (persisted through ``keep``); ``copies`` are the other members as
+    finished quarantine decisions — matched to their rep with ``sim``
+    exactly 1.0 by identity and ``score`` as the nomination column."""
+    groups = batch.groupBy(key.alias("k")).agg(F.min(id_col).alias("rep"))
+    members = (
+        batch.select(id_col, key.alias("k"))
+        .join(groups, "k")
+        .select("rep", id_col)
+    )
+    copies = members.where(F.col(id_col) != F.col("rep")).select(
+        id_col,
+        score,
+        F.col("rep").alias("matched_id"),
+        F.round(F.lit(1.0), 6).alias(sim),
+        F.lit(False).alias("admitted"),
+    )
+    reps = keep(
+        batch.join(
+            members.where(F.col(id_col) == F.col("rep")).select(id_col),
+            id_col,
+        )
+    )
+    return reps, copies
+
+
+def _decisions(
+    reps: DataFrame,
+    matches: DataFrame,
+    id_col: str,
+    order: list,
+    cols: list,
+    copies: DataFrame,
+    batch_id: int,
+) -> DataFrame:
+    """The gates' decision table: each rep's best flagged match
+    (``matches`` rows keyed by ``q_id``, ranked by ``order``); a rep
+    with none is admitted.  ``cols`` are the rep decision's columns
+    between ``id_col`` and ``admitted``.  The exact-collapse ``copies``
+    join, then ``batch_id`` and the ``gate`` routing column (a typed
+    ``admitted`` BOOLEAN stays a data column; a hive partition value
+    round-trips as a string)."""
+    from pyspark.sql.window import Window
+
+    best = (
+        matches.withColumn(
+            "__r",
+            F.row_number().over(Window.partitionBy("q_id").orderBy(*order)),
+        )
+        .where(F.col("__r") == 1)
+        .withColumnRenamed("q_id", id_col)
+    )
+    return (
+        reps.select(id_col)
+        .join(best, id_col, "left")
+        .select(id_col, *cols, F.col("matched_id").isNull().alias("admitted"))
+        .unionByName(copies)
+        .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .withColumn(
+            "gate",
+            F.when(F.col("admitted"), "admit").otherwise("quarantine"),
+        )
+    )
 
 
 # Exact-verify admission default: flag at the dedup plane's standard
@@ -1269,22 +1265,16 @@ def run_neardup_admission_stream(
     in-batch near-dups admit together and are caught from the next
     batch on).
 
-    Exactly-once shape: bands, shingles (when maintained) and
-    admissions publish as batch-keyed markers (`…-bands`, `…-sh`,
-    `…-adm`) — ``publish_batch`` partitions every table in one call
-    by one column, and the tables partition differently (band /
-    shard / gate).  Each marker replays idempotently on its own; a
-    crash between them re-lands only the missing tables into the
-    same final file set, and the stream never advances past a batch
-    whose later publish failed.  Replay determinism: a replayed
-    batch probes an index that may still hold its own crashed
-    attempt's band (and shingle) files (the erase runs at publish
-    time, after the decision) — but candidates exclude the batch's
-    own doc ids (see the probe comment), leftover band files can
-    only carry those ids, and a leftover shingle row is only ever
-    joined for a candidate's match_id (never an own-batch id), so a
-    replay re-derives bit-identical decisions from the identical
-    effective index.
+    Exactly-once: bands, shingles (when maintained) and admissions
+    publish under the ``-bands``, ``-sh`` and ``-adm`` markers (module
+    docstring).  Replay determinism: a replayed batch probes an index
+    that may still hold its own crashed attempt's band (and shingle)
+    files (the erase runs at publish time, after the decision) — but
+    candidates exclude the batch's own doc ids (see the probe
+    comment), leftover band files can only carry those ids, and a
+    leftover shingle row is only ever joined for a candidate's
+    match_id (never an own-batch id), so a replay re-derives
+    bit-identical decisions from the identical effective index.
 
     Scale shape per batch of M arrivals: signing is M-linear, the
     probe join touches matched buckets only (rank-capped), the
@@ -1300,8 +1290,6 @@ def run_neardup_admission_stream(
     ``residual_ratio``, the maintenance stream's two-bar shape — r13
     ADVICE: an ingest whose expected dup rate matches its corpus
     must not recommend rebuild forever)."""
-    from pyspark.sql.window import Window
-
     from ..operators.dedup import band_rows, minhash_signatures, shingles_expr
     from ..operators.minhash_index import (
         _shingle_table,
@@ -1309,11 +1297,8 @@ def run_neardup_admission_stream(
         read_minhash_geometry,
     )
 
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
     geo = read_minhash_geometry(spark, index_dir)
-    ifs = _meta_fs(spark, index_dir)
-    has_sh = ifs.kind(f"{ifs.root}/shingles") == "dir"
+    has_sh = _has_relation(spark, index_dir, "shingles")
     verify = threshold is not None or verify_docs is not None
     if threshold is not None and verify_docs is None and not has_sh:
         raise ValueError(
@@ -1326,301 +1311,182 @@ def run_neardup_admission_stream(
             f"verify_docs, or drop the threshold for band-hit mode."
         )
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        session = batch_df.sparkSession
-        docs = batch_df.select("doc_id", "text").persist()
-        reps = decisions = q_bands = None
-        try:
-            # 1. within-batch exact collapse
-            key = F.md5("text")
-            groups = docs.groupBy(key.alias("k")).agg(
-                F.min("doc_id").alias("rep")
-            )
-            members = (
-                docs.select("doc_id", key.alias("k"))
-                .join(groups, "k")
-                .select("rep", "doc_id")
-            )
-            copies = members.where(F.col("doc_id") != F.col("rep")).select(
-                "doc_id",
-                F.lit(geo["bands"]).alias("n_band_hits"),
-                F.col("rep").alias("matched_id"),
-                F.round(F.lit(1.0), 6).alias("jaccard"),
-                F.lit(False).alias("admitted"),
-            )
-            reps = docs.join(
-                members.where(F.col("doc_id") == F.col("rep")).select(
-                    "doc_id"
+    def step(b: _Batch):
+        session = b.session
+        docs = b.keep(b.df.select("doc_id", "text"))
+        # 1. within-batch exact collapse
+        reps, copies = _collapse_exact(
+            docs,
+            "doc_id",
+            F.md5("text"),
+            F.lit(geo["bands"]).alias("n_band_hits"),
+            "jaccard",
+            b.keep,
+        )
+
+        # 2. probe the index with the batch's own ids EXCLUDED
+        # (probe_candidates removes them BEFORE its cap window):
+        # semantically the gate asks "does this near-dup anything
+        # ALREADY ingested", and operationally a crash-replayed
+        # batch probes an index that still holds its own crashed
+        # attempt's leftover band files (erase-before-republish
+        # runs at PUBLISH time, after this decision) — without
+        # the exclusion an admitted doc would match ITSELF on
+        # replay and flip to quarantined, and a leftover row
+        # consuming a cap slot could displace a genuine indexed
+        # doc and flip a decision the other way
+        postings = session.read.parquet(f"{index_dir}/bands").select(
+            "band", "bh", "doc_id"
+        )
+        # persisted: q_bands has up to FIVE consumers per batch (two
+        # inside the index probe's probe_candidates, two more in the
+        # within-batch self probe, and the clean-bands publish) and
+        # each otherwise re-plans the Python signing pass
+        q_bands = b.keep(
+            band_rows(
+                minhash_signatures(
+                    reps, geo["n"], geo["bands"] * geo["rows_per_band"]
                 ),
-                "doc_id",
-            ).persist()
-
-            # 2. probe the index with the batch's own ids EXCLUDED
-            # (probe_candidates removes them BEFORE its cap window):
-            # semantically the gate asks "does this near-dup anything
-            # ALREADY ingested", and operationally a crash-replayed
-            # batch probes an index that still holds its own crashed
-            # attempt's leftover band files (erase-before-republish
-            # runs at PUBLISH time, after this decision) — without
-            # the exclusion an admitted doc would match ITSELF on
-            # replay and flip to quarantined, and a leftover row
-            # consuming a cap slot could displace a genuine indexed
-            # doc and flip a decision the other way (r13 review)
-            postings = session.read.parquet(f"{index_dir}/bands").select(
-                "band", "bh", "doc_id"
+                geo["bands"],
+                geo["rows_per_band"],
+            ).withColumnRenamed("doc_id", "q_id")
+        )
+        per_match = probe_candidates(postings, q_bands, exclude_ids=docs)
+        if within_batch:
+            # in-batch near-dups: the reps' band rows stand in as
+            # postings and probe THEMSELVES through the same capped
+            # shape; only (earlier -> later) directed rows survive, so
+            # the first occurrence by doc_id admits and later in-batch
+            # near-dups quarantine against it.  No exclude_ids:
+            # own-batch ids are the point here, and the relation never
+            # holds crashed-attempt leftovers (it is derived from the
+            # batch).
+            in_batch = probe_candidates(
+                q_bands.select("band", "bh", F.col("q_id").alias("doc_id")),
+                q_bands,
+            ).where(F.col("match_id") < F.col("q_id"))
+            per_match = per_match.unionByName(in_batch)
+        if verify:
+            bar = JACCARD_ADMIT_DEFAULT if threshold is None else threshold
+            qsh = reps.select(
+                F.col("doc_id").alias("q_id"),
+                shingles_expr(geo["n"]).alias("sh_a"),
             )
-            # persisted (r14, guide §2.4): q_bands has up to FIVE
-            # consumers per batch (two inside the index probe's
-            # probe_candidates, two more in the within-batch self
-            # probe, and the clean-bands publish) and each otherwise
-            # re-plans the Python signing pass; reps being persisted
-            # caches only the signing's INPUT, not its output
-            q_bands = (
-                band_rows(
-                    minhash_signatures(
-                        reps, geo["n"], geo["bands"] * geo["rows_per_band"]
-                    ),
-                    geo["bands"],
-                    geo["rows_per_band"],
-                )
-                .withColumnRenamed("doc_id", "q_id")
-                .persist()
-            )
-            per_match = probe_candidates(
-                postings, q_bands, exclude_ids=docs
-            )
-            if within_batch:
-                # in-batch near-dups (r14): the reps' band rows stand
-                # in as postings and probe THEMSELVES through the
-                # same capped shape; only (earlier -> later) directed
-                # rows survive, so the first occurrence by doc_id
-                # admits and later in-batch near-dups quarantine
-                # against it.  No exclude_ids: own-batch ids are the
-                # point here, and the relation never holds crashed-
-                # attempt leftovers (it is derived from the batch).
-                in_batch = probe_candidates(
-                    q_bands.select(
-                        "band", "bh", F.col("q_id").alias("doc_id")
-                    ),
-                    q_bands,
-                ).where(F.col("match_id") < F.col("q_id"))
-                per_match = per_match.unionByName(in_batch)
-            if verify:
-                bar = (
-                    JACCARD_ADMIT_DEFAULT if threshold is None else threshold
-                )
-                qsh = reps.select(
-                    F.col("doc_id").alias("q_id"),
-                    shingles_expr(geo["n"]).alias("sh_a"),
-                )
-                # sh_b sources, LEFT-joined in preference order: the
-                # index's persisted relation (self-maintained,
-                # pre-computed arrays), the caller's verify_docs, the
-                # batch's own reps (within-batch candidates' matches).
-                # Ids never conflict on VALUE across sources (same
-                # doc -> same shingles), so coalesce order is cost,
-                # not correctness.
-                srcs = []
-                if has_sh:
-                    srcs.append(
-                        session.read.parquet(
-                            f"{index_dir}/shingles"
-                        ).select(
-                            F.col("doc_id").alias("match_id"),
-                            F.col("shingles").alias("__shb0"),
-                        )
-                    )
-                if verify_docs is not None:
-                    srcs.append(
-                        verify_docs.select(
-                            F.col("doc_id").alias("match_id"),
-                            shingles_expr(geo["n"]).alias("__shb1"),
-                        )
-                    )
-                if within_batch:
-                    srcs.append(
-                        reps.select(
-                            F.col("doc_id").alias("match_id"),
-                            shingles_expr(geo["n"]).alias("__shb2"),
-                        )
-                    )
-                cand = per_match.join(qsh, "q_id")
-                cols = []
-                for s in srcs:
-                    cols.append(s.columns[-1])
-                    cand = cand.join(s, "match_id", "left")
-                sh_b = F.coalesce(*[F.col(c) for c in cols])
-                inter = F.size(F.array_intersect(F.col("sh_a"), sh_b))
-                union_sz = F.size("sh_a") + F.size(sh_b) - inter
-                jac = inter.cast("double") / union_sz
-                # verified candidates flag on the UNROUNDED exact
-                # Jaccard at the bar; unverifiable ones (no shingle
-                # source knows the match — a bands-only index with an
-                # incomplete verify_docs, or the bands/shingles crash
-                # window — or an empty shingle union) fall back to
-                # the band-hit flag: fail-CLOSED (r13 ADVICE medium —
-                # the old inner-join verify silently ADMITTED exactly
-                # the candidates the gate itself had admitted before)
-                keep = F.when(
-                    jac.isNotNull(), jac >= F.lit(bar)
-                ).otherwise(F.col("n_band_hits") >= F.lit(min_bands))
-                per_match = (
-                    cand.where(keep)
-                    .withColumn(
-                        "jaccard",
-                        F.when(jac.isNotNull(), F.round(jac, 6)).cast(
-                            "double"
-                        ),
-                    )
-                    .select("q_id", "match_id", "n_band_hits", "jaccard")
-                )
-            else:
-                per_match = per_match.where(
-                    F.col("n_band_hits") >= F.lit(min_bands)
-                ).withColumn("jaccard", F.lit(None).cast("double"))
-            wbest = Window.partitionBy("q_id").orderBy(
-                F.desc("n_band_hits"), F.asc("match_id")
-            )
-            best = (
-                per_match.withColumn("__r", F.row_number().over(wbest))
-                .where(F.col("__r") == 1)
-                .select("q_id", "match_id", "n_band_hits", "jaccard")
-            )
-            rep_decisions = (
-                reps.select("doc_id")
-                .join(
-                    best.withColumnRenamed("q_id", "doc_id"),
-                    "doc_id",
-                    "left",
-                )
-                .select(
-                    "doc_id",
-                    F.coalesce("n_band_hits", F.lit(0)).alias(
-                        "n_band_hits"
-                    ),
-                    F.col("match_id").alias("matched_id"),
-                    "jaccard",
-                    F.col("match_id").isNull().alias("admitted"),
-                )
-            )
-            decisions = (
-                rep_decisions.unionByName(copies)
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .withColumn(
-                    "gate",
-                    F.when(F.col("admitted"), "admit").otherwise(
-                        "quarantine"
-                    ),
-                )
-                .persist()
-            )
-
-            # 3. publish: clean reps' bands (the probe pass's own band
-            # rows, filtered — no second signature pass), then the
-            # decision table
-            clean_bands = q_bands.withColumnRenamed(
-                "q_id", "doc_id"
-            ).join(decisions.where("admitted").select("doc_id"), "doc_id")
-            _check_epoch(session, index_dir, bound_epoch)
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}-bands",
-                {"bands": clean_bands.select("doc_id", "band", "bh")},
-                part_col="band",
-            )
+            # sh_b sources, LEFT-joined in preference order: the
+            # index's persisted relation (self-maintained,
+            # pre-computed arrays), the caller's verify_docs, the
+            # batch's own reps (within-batch candidates' matches).
+            # Ids never conflict on VALUE across sources (same doc ->
+            # same shingles), so coalesce order is cost, not
+            # correctness.
+            srcs = []
             if has_sh:
-                # the admitted reps' shingles join the verify relation
-                # with their bands — this is what keeps verify-mode
-                # self-maintenance true (docstring step 3)
-                publish_batch(
-                    session,
-                    index_dir,
-                    f"{lineage}-{batch_id}-sh",
-                    {
-                        "shingles": _shingle_table(
-                            docs.join(
-                                decisions.where("admitted").select(
-                                    "doc_id"
-                                ),
-                                "doc_id",
-                            ),
-                            geo["n"],
-                        )
-                    },
-                    part_col="shard",
+                srcs.append(
+                    session.read.parquet(f"{index_dir}/shingles").select(
+                        F.col("doc_id").alias("match_id"),
+                        F.col("shingles").alias("__shb0"),
+                    )
                 )
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}-adm",
-                {"admissions": decisions},
-                part_col="gate",
+            if verify_docs is not None:
+                srcs.append(
+                    verify_docs.select(
+                        F.col("doc_id").alias("match_id"),
+                        shingles_expr(geo["n"]).alias("__shb1"),
+                    )
+                )
+            if within_batch:
+                srcs.append(
+                    reps.select(
+                        F.col("doc_id").alias("match_id"),
+                        shingles_expr(geo["n"]).alias("__shb2"),
+                    )
+                )
+            cand = per_match.join(qsh, "q_id")
+            for s in srcs:
+                cand = cand.join(s, "match_id", "left")
+            sh_b = F.coalesce(*[F.col(s.columns[-1]) for s in srcs])
+            inter = F.size(F.array_intersect(F.col("sh_a"), sh_b))
+            jac = inter.cast("double") / (
+                F.size("sh_a") + F.size(sh_b) - inter
             )
-            (srow,) = decisions.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("admitted"), 0).otherwise(1)).alias(
-                    "flagged"
+            # verified candidates flag on the UNROUNDED exact Jaccard
+            # at the bar; unverifiable ones (no shingle source knows
+            # the match — a bands-only index with an incomplete
+            # verify_docs, or the bands/shingles crash window — or an
+            # empty shingle union) fall back to the band-hit flag:
+            # fail-CLOSED, so verify mode never silently admits a doc
+            # the band evidence flagged
+            flagged = F.when(jac.isNotNull(), jac >= F.lit(bar)).otherwise(
+                F.col("n_band_hits") >= F.lit(min_bands)
+            )
+            per_match = cand.where(flagged).withColumn(
+                "jaccard",
+                F.when(jac.isNotNull(), F.round(jac, 6)).cast("double"),
+            )
+        else:
+            per_match = per_match.where(
+                F.col("n_band_hits") >= F.lit(min_bands)
+            ).withColumn("jaccard", F.lit(None).cast("double"))
+        decisions = b.keep(
+            _decisions(
+                reps,
+                per_match.select(
+                    "q_id",
+                    F.col("match_id").alias("matched_id"),
+                    "n_band_hits",
+                    "jaccard",
                 ),
-            ).collect()
-            n = srow.n or 0
-            rate = ((srow.flagged or 0) / n) if n else 0.0
-            # rated against the index's build-time dup-rate baseline —
-            # the maintenance stream's two-bar shape (r13 ADVICE): an
-            # ingest whose flag rate matches the dup rate of the very
-            # corpus the index was built from is business as usual,
-            # not drift, and must not recommend rebuild forever
-            base = _index_baseline(session, index_dir).get("dup_rate")
-            ratio = (rate / base) if (base and base > 0) else None
-            _append_drift(
-                session,
-                index_dir,
-                {
-                    "batch_id": batch_id,
-                    "n": n,
-                    "cells_touched": None,
-                    "top_cell_share": None,
-                    "mean_residual": round(rate, 6),
-                    "baseline_residual": base,
-                    "residual_ratio": (
-                        round(ratio, 6) if ratio is not None else None
-                    ),
-                    "rebuild_recommended": bool(
-                        n >= DRIFT_MIN_BATCH
-                        and rate > MINHASH_DRIFT_MIN_DUP_RATE
-                        and (
-                            base is None
-                            or base == 0
-                            or rate > MINHASH_DRIFT_DUP_RATE_RATIO * base
-                        )
-                    ),
-                },
-                lineage=lineage,
+                "doc_id",
+                [F.desc("n_band_hits"), F.asc("matched_id")],
+                [
+                    F.coalesce("n_band_hits", F.lit(0)).alias("n_band_hits"),
+                    "matched_id",
+                    "jaccard",
+                ],
+                copies,
+                b.batch_id,
             )
-        finally:
-            # unpersist in finally (r13 review): a fence refusal or
-            # publish failure between persist and here must not leak
-            # cached relations across a crash/retry loop
-            docs.unpersist()
-            if reps is not None:
-                reps.unpersist()
-            if q_bands is not None:
-                q_bands.unpersist()
-            if decisions is not None:
-                decisions.unpersist()
+        )
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
+        # 3. publish: clean reps' bands (the probe pass's own band
+        # rows, filtered — no second signature pass), their shingles
+        # when the index keeps the verify relation (this keeps
+        # verify-mode self-maintenance true), then the decision table
+        admitted = decisions.where("admitted").select("doc_id")
+        clean_bands = q_bands.withColumnRenamed("q_id", "doc_id").join(
+            admitted, "doc_id"
+        )
+        publishes = [
+            (
+                "-bands",
+                {"bands": clean_bands.select("doc_id", "band", "bh")},
+                "band",
+            )
+        ]
+        if has_sh:
+            shingles = _shingle_table(docs.join(admitted, "doc_id"), geo["n"])
+            publishes.append(("-sh", {"shingles": shingles}, "shard"))
+        publishes.append(("-adm", {"admissions": decisions}, "gate"))
+
+        def drift() -> dict:
+            # rated against the index's build-time dup-rate baseline:
+            # an ingest whose flag rate matches the dup rate of the
+            # very corpus the index was built from is business as
+            # usual, not drift, and must not recommend rebuild forever
+            n, rate = _flag_rate(decisions)
+            base = _index_baseline(session, index_dir).get("dup_rate")
+            return _rate_drift_row(n, rate, base)
+
+        return publishes, drift
+
+    return _run_index_stream(
+        spark, docs_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-# Semantic admission (r14): exact-cosine bar for the verified path —
-# the SemDeDup-style "semantically redundant" threshold; arrivals at
-# or above it against any indexed vector are quarantined.
+# Semantic admission: exact-cosine bar for the verified path — the
+# SemDeDup-style "semantically redundant" threshold; arrivals at or
+# above it against any indexed vector are quarantined.
 SEMANTIC_ADMIT_COSINE = 0.92
 # There is deliberately NO default quantized-score bar: measured on
 # the test corpus, the ADC of an EXACT COPY ranges 0.37-0.75 (median
@@ -1750,8 +1616,6 @@ def run_semantic_admission_stream(
     a genuine surge doubles the trailing median and flags (the r13
     ADVICE two-bar lesson, without a build-time baseline to lean
     on)."""
-    from pyspark.sql.window import Window
-
     from ..operators.similarity import (
         IVFPQ_NPROBE,
         PQ_RERANK,
@@ -1760,16 +1624,14 @@ def run_semantic_admission_stream(
         _vector_table,
         cosine_expr,
         ivfpq_adc_shortlist,
+        ivfpq_residuals,
         pq_encode,
         with_norm,
     )
 
     nprobe = IVFPQ_NPROBE if nprobe is None else nprobe
     rerank = PQ_RERANK if rerank is None else rerank
-    bound_epoch = _bind_index_epoch(spark, index_dir, checkpoint_dir)
-    lineage = _lineage_id(spark, checkpoint_dir)
-    ifs = _meta_fs(spark, index_dir)
-    has_vec = ifs.kind(f"{ifs.root}/vectors") == "dir"
+    has_vec = _has_relation(spark, index_dir, "vectors")
     if not has_vec and verify_vecs is None and adc_bar is None:
         raise ValueError(
             f"semantic admission: the index at {index_dir} has no "
@@ -1783,312 +1645,182 @@ def run_semantic_admission_stream(
             f"your own corpus."
         )
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        from ..session import local_rows_df
+    def step(b: _Batch):
+        session = b.session
+        vecs = b.keep(b.df.select("vec_id", "embedding"))
+        # 1. within-batch exact collapse (bit-identical arrays)
+        reps, copies = _collapse_exact(
+            vecs,
+            "vec_id",
+            F.xxhash64("embedding"),
+            F.lit(None).cast("double").alias("adc"),
+            "cosine",
+            b.keep,
+        )
+        batch_ids = [r.vec_id for r in reps.select("vec_id").collect()]
 
-        session = batch_df.sparkSession
-        vecs = batch_df.select("vec_id", "embedding").persist()
-        reps = decisions = None
-        try:
-            # 1. within-batch exact collapse (bit-identical arrays)
-            key = F.xxhash64("embedding")
-            groups = vecs.groupBy(key.alias("k")).agg(
-                F.min("vec_id").alias("rep")
+        # 2. ADC nomination against the persisted index, own ids
+        # excluded before the shortlist cut
+        cents = _index_array(session, index_dir, "centroids")
+        books = _index_array(session, index_dir, "codebooks")
+        coded = session.read.parquet(f"{index_dir}/codes").select(
+            "cluster", "vec_id", "code"
+        )
+        cand = ivfpq_adc_shortlist(
+            session,
+            reps,
+            (cents, books, coded),
+            nprobe=nprobe,
+            rerank=rerank,
+            exclude_ids=batch_ids,
+        )
+        if within_batch:
+            # 3. same-cell exact-cosine pairs among the reps; earlier
+            # vec_id admits (deterministic, batch-only)
+            assigned = _assign_clusters(with_norm(reps), cents)
+            rn = (
+                with_norm(reps)
+                .join(assigned.select("vec_id", "cluster"), "vec_id")
+                .select("vec_id", "cluster", "emb_d", "norm")
             )
-            members = (
-                vecs.select("vec_id", key.alias("k"))
-                .join(groups, "k")
-                .select("rep", "vec_id")
-            )
-            copies = members.where(
-                F.col("vec_id") != F.col("rep")
-            ).select(
-                "vec_id",
-                F.lit(None).cast("double").alias("adc"),
-                F.col("rep").alias("matched_id"),
-                F.round(F.lit(1.0), 6).alias("cosine"),
-                F.lit(False).alias("admitted"),
-            )
-            reps = vecs.join(
-                members.where(F.col("vec_id") == F.col("rep")).select(
-                    "vec_id"
-                ),
-                "vec_id",
-            ).persist()
-            batch_ids = [r.vec_id for r in reps.select("vec_id").collect()]
-
-            # 2. ADC nomination against the persisted index, own ids
-            # excluded before the shortlist cut
-            cents = _index_centroids(session, index_dir)
-            books = _index_books(session, index_dir)
-            coded = session.read.parquet(f"{index_dir}/codes").select(
-                "cluster", "vec_id", "code"
-            )
-            cand = ivfpq_adc_shortlist(
-                session,
-                reps,
-                (cents, books, coded),
-                nprobe=nprobe,
-                rerank=rerank,
-                exclude_ids=batch_ids,
-            )
-            if within_batch:
-                # 3. same-cell exact-cosine pairs among the reps;
-                # earlier vec_id admits (deterministic, batch-only)
-                assigned = _assign_clusters(with_norm(reps), cents)
-                rn = with_norm(reps).join(
-                    assigned.select("vec_id", "cluster"), "vec_id"
-                ).select("vec_id", "cluster", "emb_d", "norm")
-                a = rn.alias("a")
-                b = rn.alias("b")
-                in_batch = (
-                    a.join(b, F.col("a.cluster") == F.col("b.cluster"))
-                    .where(F.col("b.vec_id") < F.col("a.vec_id"))
-                    .select(
-                        F.col("a.vec_id").alias("q_id"),
-                        F.col("b.vec_id").alias("neighbor_id"),
-                        cosine_expr("a", "b").alias("adc"),
-                    )
-                    .where(F.col("adc") >= F.lit(threshold))
-                )
-                cand = cand.unionByName(in_batch)
-
-            # exact verification in preference order: persisted
-            # vectors -> verify_vecs -> the batch's own reps
-            srcs = []
-            if has_vec:
-                srcs.append(
-                    session.read.parquet(f"{index_dir}/vectors").select(
-                        F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("__emb0"),
-                    )
-                )
-            if verify_vecs is not None:
-                srcs.append(
-                    verify_vecs.select(
-                        F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("__emb1"),
-                    )
-                )
-            if within_batch:
-                srcs.append(
-                    reps.select(
-                        F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("__emb2"),
-                    )
-                )
-            qn = with_norm(reps).select(
-                F.col("vec_id").alias("q_id"), "emb_d", "norm"
-            )
-            jc = cand.join(qn.alias("q"), "q_id")
-            cols = []
-            for s in srcs:
-                cols.append(s.columns[-1])
-                jc = jc.join(s, "neighbor_id", "left")
-            if cols:
-                # b-side prepared EXPLICITLY — with_norm would
-                # short-circuit on the query side's emb_d column and
-                # silently score q against itself
-                emb_b = F.transform(
-                    F.coalesce(*[F.col(c) for c in cols]),
-                    lambda x: x.cast("double"),
-                )
-                norm_b = F.sqrt(
-                    F.aggregate(
-                        emb_b, F.lit(0.0), lambda acc, x: acc + x * x
-                    )
-                )
-                dot = F.aggregate(
-                    F.zip_with(
-                        F.col("emb_d"), emb_b, lambda x, y: x * y
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                scored = jc.withColumn(
-                    "__cos", dot / (F.col("norm") * norm_b)
-                )
-            else:
-                scored = jc.withColumn(
-                    "__cos", F.lit(None).cast("double")
-                )
-            # verified candidates decide on the exact cosine at the
-            # bar; unverifiable ones only flag when the caller gave a
-            # calibrated adc_bar (with the persisted relation and the
-            # vectors-before-codes publish order, an unverifiable
-            # candidate cannot arise from the gate's own operation —
-            # only from an incomplete verify_vecs or a legacy index)
-            keep = F.when(
-                F.col("__cos").isNotNull(),
-                F.col("__cos") >= F.lit(threshold),
-            ).otherwise(
-                F.lit(False)
-                if adc_bar is None
-                else F.col("adc") >= F.lit(adc_bar)
-            )
-            flagged = (
-                scored.where(keep)
+            in_batch = (
+                rn.alias("a")
+                .join(rn.alias("b"), F.col("a.cluster") == F.col("b.cluster"))
+                .where(F.col("b.vec_id") < F.col("a.vec_id"))
                 .select(
+                    F.col("a.vec_id").alias("q_id"),
+                    F.col("b.vec_id").alias("neighbor_id"),
+                    cosine_expr("a", "b").alias("adc"),
+                )
+                .where(F.col("adc") >= F.lit(threshold))
+            )
+            cand = cand.unionByName(in_batch)
+
+        # exact verification in preference order: persisted vectors ->
+        # verify_vecs -> the batch's own reps
+        srcs = []
+        if has_vec:
+            srcs.append(
+                session.read.parquet(f"{index_dir}/vectors").select(
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("embedding").alias("__emb0"),
+                )
+            )
+        if verify_vecs is not None:
+            srcs.append(
+                verify_vecs.select(
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("embedding").alias("__emb1"),
+                )
+            )
+        if within_batch:
+            srcs.append(
+                reps.select(
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("embedding").alias("__emb2"),
+                )
+            )
+        qn = with_norm(reps).select(
+            F.col("vec_id").alias("q_id"), "emb_d", "norm"
+        )
+        jc = cand.join(qn.alias("q"), "q_id")
+        for s in srcs:
+            jc = jc.join(s, "neighbor_id", "left")
+        if srcs:
+            # b-side prepared EXPLICITLY — with_norm would
+            # short-circuit on the query side's emb_d column and
+            # silently score q against itself
+            emb_b = F.transform(
+                F.coalesce(*[F.col(s.columns[-1]) for s in srcs]),
+                lambda x: x.cast("double"),
+            )
+            norm_b = F.sqrt(
+                F.aggregate(emb_b, F.lit(0.0), lambda acc, x: acc + x * x)
+            )
+            dot = F.aggregate(
+                F.zip_with(F.col("emb_d"), emb_b, lambda x, y: x * y),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            scored = jc.withColumn("__cos", dot / (F.col("norm") * norm_b))
+        else:
+            scored = jc.withColumn("__cos", F.lit(None).cast("double"))
+        # verified candidates decide on the exact cosine at the bar;
+        # unverifiable ones only flag when the caller gave a
+        # calibrated adc_bar (with the persisted relation and the
+        # vectors-before-codes publish order, an unverifiable
+        # candidate cannot arise from the gate's own operation — only
+        # from an incomplete verify_vecs or a legacy index)
+        flagged = F.when(
+            F.col("__cos").isNotNull(), F.col("__cos") >= F.lit(threshold)
+        ).otherwise(
+            F.lit(False) if adc_bar is None else F.col("adc") >= F.lit(adc_bar)
+        )
+        decisions = b.keep(
+            _decisions(
+                reps,
+                scored.where(flagged).select(
                     "q_id",
                     F.col("neighbor_id").alias("matched_id"),
                     F.round("adc", 6).alias("adc"),
                     F.when(
-                        F.col("__cos").isNotNull(),
-                        F.round(F.col("__cos"), 6),
-                    ).cast("double").alias("cosine"),
-                )
-            )
-            wbest = Window.partitionBy("q_id").orderBy(
-                F.desc_nulls_last("cosine"),
-                F.desc_nulls_last("adc"),
-                F.asc("matched_id"),
-            )
-            best = (
-                flagged.withColumn("__r", F.row_number().over(wbest))
-                .where(F.col("__r") == 1)
-                .select("q_id", "matched_id", "adc", "cosine")
-            )
-            rep_decisions = (
-                reps.select("vec_id")
-                .join(
-                    best.withColumnRenamed("q_id", "vec_id"),
-                    "vec_id",
-                    "left",
-                )
-                .select(
-                    "vec_id",
-                    "adc",
-                    "matched_id",
-                    "cosine",
-                    F.col("matched_id").isNull().alias("admitted"),
-                )
-            )
-            decisions = (
-                rep_decisions.unionByName(copies)
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .withColumn(
-                    "gate",
-                    F.when(F.col("admitted"), "admit").otherwise(
-                        "quarantine"
-                    ),
-                )
-                .persist()
-            )
-
-            # 4. publish: clean reps' residual codes (the maintenance
-            # stream's exact encode — frozen components), optional raw
-            # vectors, then the decision table
-            clean = reps.join(
-                decisions.where("admitted").select("vec_id"), "vec_id"
-            )
-            cn = _unit_corpus(with_norm(clean))
-            assigned = _assign_clusters(cn, cents).select(
-                "vec_id", "cluster"
-            )
-            cent_df = local_rows_df(
-                session,
-                [
-                    (int(i), [float(v) for v in cents[i]])
-                    for i in range(len(cents))
-                ],
-                "cluster int, carr array<double>",
-            )
-            res = (
-                cn.join(assigned, "vec_id")
-                .join(F.broadcast(cent_df), "cluster")
-                .select(
-                    "vec_id",
-                    F.zip_with(
-                        "emb_d", "carr", lambda x, c: x - c
-                    ).alias("emb_d"),
-                    F.lit(1.0).alias("norm"),
-                )
-            )
-            coded_out = (
-                pq_encode(res, books)
-                .join(assigned, "vec_id")
-                .select("cluster", "vec_id", "code")
-            )
-            _check_epoch(session, index_dir, bound_epoch)
-            # vectors land BEFORE codes: a code row is what nominates
-            # candidates, so the crash window can only produce the
-            # inert "vector without code", never a code row whose
-            # exact verification is impossible (the minhash
-            # bands-before-shingles argument, direction REVERSED to
-            # match which table drives nomination here)
-            if has_vec:
-                publish_batch(
-                    session,
-                    index_dir,
-                    f"{lineage}-{batch_id}-vec",
-                    {
-                        "vectors": _vector_table(
-                            clean.select("vec_id", "embedding")
-                        )
-                    },
-                    part_col="shard",
-                )
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}-codes",
-                {"codes": coded_out},
-                part_col="cluster",
-            )
-            publish_batch(
-                session,
-                index_dir,
-                f"{lineage}-{batch_id}-adm",
-                {"admissions": decisions},
-                part_col="gate",
-            )
-            (srow,) = decisions.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("admitted"), 0).otherwise(1)).alias(
-                    "flagged"
+                        F.col("__cos").isNotNull(), F.round(F.col("__cos"), 6)
+                    )
+                    .cast("double")
+                    .alias("cosine"),
                 ),
-            ).collect()
-            n = srow.n or 0
-            rate = ((srow.flagged or 0) / n) if n else 0.0
-            base = _lineage_trailing_baseline(ifs, lineage)
-            ratio = (rate / base) if (base and base > 0) else None
-            _append_drift(
-                session,
-                index_dir,
-                {
-                    "batch_id": batch_id,
-                    "n": n,
-                    "cells_touched": None,
-                    "top_cell_share": None,
-                    "mean_residual": round(rate, 6),
-                    "baseline_residual": base,
-                    "residual_ratio": (
-                        round(ratio, 6) if ratio is not None else None
-                    ),
-                    "rebuild_recommended": bool(
-                        n >= DRIFT_MIN_BATCH
-                        and rate > SEMANTIC_DRIFT_MIN_FLAG_RATE
-                        and (
-                            base is None
-                            or base == 0
-                            or rate
-                            > SEMANTIC_DRIFT_FLAG_RATE_RATIO * base
-                        )
-                    ),
-                },
-                lineage=lineage,
+                "vec_id",
+                [
+                    F.desc_nulls_last("cosine"),
+                    F.desc_nulls_last("adc"),
+                    F.asc("matched_id"),
+                ],
+                ["adc", "matched_id", "cosine"],
+                copies,
+                b.batch_id,
             )
-        finally:
-            vecs.unpersist()
-            if reps is not None:
-                reps.unpersist()
-            if decisions is not None:
-                decisions.unpersist()
+        )
 
-    writer = (
-        vectors_stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
+        # 4. publish: clean reps' residual codes (the maintenance
+        # stream's exact encode — frozen components), optional raw
+        # vectors, then the decision table.  Vectors land BEFORE
+        # codes: a code row is what nominates candidates, so the crash
+        # window can only produce the inert "vector without code",
+        # never a code row whose exact verification is impossible
+        # (the minhash bands-before-shingles argument, direction
+        # REVERSED to match which table drives nomination here)
+        clean = reps.join(
+            decisions.where("admitted").select("vec_id"), "vec_id"
+        )
+        cn = _unit_corpus(with_norm(clean))
+        assigned = _assign_clusters(cn, cents).select("vec_id", "cluster")
+        coded_out = (
+            pq_encode(ivfpq_residuals(session, cn, assigned, cents), books)
+            .join(assigned, "vec_id")
+            .select("cluster", "vec_id", "code")
+        )
+        publishes = []
+        if has_vec:
+            vectors = _vector_table(clean.select("vec_id", "embedding"))
+            publishes.append(("-vec", {"vectors": vectors}, "shard"))
+        publishes.append(("-codes", {"codes": coded_out}, "cluster"))
+        publishes.append(("-adm", {"admissions": decisions}, "gate"))
+
+        def drift() -> dict:
+            n, rate = _flag_rate(decisions)
+            base = _lineage_trailing_baseline(
+                _meta_fs(session, index_dir), b.lineage
+            )
+            return _rate_drift_row(
+                n,
+                rate,
+                base,
+                SEMANTIC_DRIFT_MIN_FLAG_RATE,
+                SEMANTIC_DRIFT_FLAG_RATE_RATIO,
+            )
+
+        return publishes, drift
+
+    return _run_index_stream(
+        spark, vectors_stream, index_dir, checkpoint_dir, available_now, step
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.cdc import OP_COL, OP_UPSERT
-from .etl_stream import _lineage_id, _meta_fs
+from .etl_stream import _lineage_id, _meta_fs, start_foreach_batch
 
 CURRENT_PTR = "_current"
 
@@ -360,10 +360,6 @@ def _run_merge_stream(
         fs.write_bytes(marker, b"")
         _retire_old_versions(fs, version, keep_versions)
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        changes_stream, merge_batch, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -30,8 +30,8 @@ idempotent-sink upgrade the r6 docstring promised):
    next attempt deletes it first.
 2. **Committed-batch manifest.**  After all nine tables publish, a
    marker lands at ``_batch_commits/{lineage}-{id}``; a replay that
-   finds the marker skips the batch outright (pure fast path —
-   correctness comes from piece 1).
+   finds the marker skips every publish (``publish_batch``; a fast
+   path only — correctness comes from piece 1).
 
 Both keys carry a **lineage id** because ``batch_id`` is only unique
 within one checkpoint lineage — the same (appId, version) pairing
@@ -62,7 +62,8 @@ from ..sources.sync import _pyarrow_resolves
 from ..sources.tenhou_datasource import PARSED_TABLE, register_tenhou_source
 
 # Bounded concurrency for per-file metadata ops (delete/move) inside
-# one table's publish.  On an object store a "move" is a server-side
+# one table's publish, and for the table publishes of one batch.  On
+# an object store a "move" is a server-side
 # copy+delete round-trip per file; a serial loop makes the batch
 # latency floor = n_files x RTT (r7 verdict item 3).  Both pyarrow
 # filesystems and the JVM Hadoop FileSystem are thread-safe.
@@ -302,33 +303,19 @@ def _lineage_id(spark: SparkSession, checkpoint_dir: str) -> str:
     return winner
 
 
-def _publish_table(batch_df, t: str, out_dir: str, key: str, fs) -> None:
-    """Stage one table's batch output, then publish it idempotently.
-    Module-level (not a closure) so the crash-replay test can inject
-    faults at the table boundary; ``fs`` is the batch's shared
-    metadata FS (constructing one per table would re-run scheme
-    resolution ~10x per batch on a remote store)."""
-    _publish_table_df(
-        batch_df.select("dt", F.explode(t).alias("r")).select("dt", "r.*"),
-        t,
-        out_dir,
-        key,
-        fs,
-    )
-
-
 def _publish_table_df(
     df, t: str, out_dir: str, key: str, fs, part_col: str = "dt"
 ) -> None:
     """Idempotent batch-keyed publish of one already-shaped table
     DataFrame (must carry the ``part_col`` partition column — ``dt``
-    for the fact planes, ``cluster`` for the ANN postings stream):
-    stage under ``_staging/``, delete any ``b{key}-*`` leftovers from
-    an interrupted attempt in the target partitions, then move the
-    staged files in under that batch-keyed prefix.  Shared by the
-    tenhou streaming ETL (array fan-out), the binaryFile ingest
-    stream (pre-exploded tables), and the IVF index maintenance
-    stream (streaming/ann_index_stream.py)."""
+    for the fact planes, ``cluster``/``band``/``shard``/``gate`` for
+    the index streams): stage under ``_staging/``, delete any
+    ``b{key}-*`` leftovers from an interrupted attempt in the target
+    partitions, then move the staged files in under that batch-keyed
+    prefix.  Module-level (not a closure) so the crash-replay tests
+    can inject faults at the table boundary; ``fs`` is the batch's
+    shared metadata FS (constructing one per table would re-run scheme
+    resolution ~10x per batch on a remote store)."""
     staging = f"{out_dir}/_staging/batch-{key}/{t}"
     (
         df.write.mode("overwrite")
@@ -379,34 +366,27 @@ def publish_batch(
     ``_batch_commits/{key}`` marker.  Returns False (a no-op) when the
     marker already exists — the batch fully published before a crash.
     This is the foreachBatch sink discipline shared by run_etl_stream,
-    streaming/ingest.py and the IVF index maintenance stream
-    (``part_col="cluster"``); ``key`` must embed a per-checkpoint
-    lineage id (``_lineage_id``) so distinct checkpoints never collide
-    on batch numbers."""
+    streaming/ingest.py and the index/admission streams
+    (streaming/ann_index_stream.py); ``key`` must embed a
+    per-checkpoint lineage id (``_lineage_id``) so distinct
+    checkpoints never collide on batch numbers."""
     fs = _meta_fs(spark, out_dir)
     marker = f"{fs.root}/_batch_commits/{key}"
     if fs.kind(marker) is not None:
         return False
-    # Publish the tables concurrently (same ThreadPool fanout as the
+    # Publish the tables concurrently (same bounded-pool fanout as the
     # batch ETL's nine sinks, plans/etl.py): each publish is an
     # independent Spark write job + metadata moves; serial publishes
     # paid n_tables job-latency floors per micro-batch (r7 verdict
     # item 3).  The marker write stays strictly AFTER every table
     # lands — a failure in any one withholds it, and the whole batch
     # replays (erase-before-republish makes that idempotent).
-    with ThreadPoolExecutor(max_workers=max(1, len(table_dfs))) as pool:
-        futs = [
-            pool.submit(_publish_table_df, df, t, out_dir, key, fs, part_col)
-            for t, df in table_dfs.items()
-        ]
-        errs = []
-        for f in futs:
-            try:
-                f.result()
-            except Exception as e:
-                errs.append(e)
-        if errs:
-            raise errs[0]
+    _par_files(
+        lambda item: _publish_table_df(
+            item[1], item[0], out_dir, key, fs, part_col
+        ),
+        table_dfs.items(),
+    )
     bdir = f"{fs.root}/_staging/batch-{key}"
     if fs.kind(bdir) is not None:
         fs.delete_dir(bdir)
@@ -439,45 +419,37 @@ def run_etl_stream(
     )
 
     def fan_out(batch_df, batch_id: int) -> None:
-        fs = _meta_fs(batch_df.sparkSession, out_dir)
-        key = f"{lineage}-{batch_id}"
-        marker = f"{fs.root}/_batch_commits/{key}"
-        if fs.kind(marker) is not None:
-            return  # fully published before a crash; replay is a no-op
         batch_df = batch_df.persist()
-        # materialize the cache ONCE before the concurrent fanout so
-        # the nine publish jobs don't race to fill it (the batch ETL's
-        # bookkeeping aggregate plays the same role, plans/etl.py)
-        batch_df.count()
         try:
-            # concurrent per-table publishes; marker only after ALL
-            # land (same discipline as publish_batch above)
-            with ThreadPoolExecutor(max_workers=len(TABLE_SCHEMAS)) as pool:
-                futs = [
-                    pool.submit(
-                        _publish_table, batch_df, t, out_dir, key, fs
+            # materialize the cache ONCE before the concurrent fanout so
+            # the nine publish jobs don't race to fill it (the batch
+            # ETL's bookkeeping aggregate plays the same role,
+            # plans/etl.py)
+            batch_df.count()
+            publish_batch(
+                batch_df.sparkSession,
+                out_dir,
+                f"{lineage}-{batch_id}",
+                {
+                    t: batch_df.select("dt", F.explode(t).alias("r")).select(
+                        "dt", "r.*"
                     )
                     for t in TABLE_SCHEMAS
-                ]
-                errs = []
-                for fut in futs:
-                    try:
-                        fut.result()
-                    except Exception as e:
-                        errs.append(e)
-                if errs:
-                    raise errs[0]
+                },
+            )
         finally:
             batch_df.unpersist()
-        bdir = f"{fs.root}/_staging/batch-{key}"
-        if fs.kind(bdir) is not None:
-            fs.delete_dir(bdir)  # now-empty per-table staging parents
-        fs.mkdirs(f"{fs.root}/_batch_commits")
-        fs.write_bytes(marker, b"")
 
-    writer = (
-        parsed.writeStream.foreachBatch(fan_out)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(parsed, fan_out, checkpoint_dir, available_now)
+
+
+def start_foreach_batch(stream, fn, checkpoint_dir: str, available_now: bool):
+    """Start ``stream``'s ``foreachBatch(fn)`` writer on its checkpoint
+    — AvailableNow (drain what is there, then stop) or a standing
+    micro-batch query.  The one writer start-up every publishing
+    stream shares."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_dir
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..plans.etl import PARSED_GAME_SCHEMA, _parse_batches, table_df
 from ..schemas import TABLE_SCHEMAS
-from .etl_stream import _lineage_id, publish_batch
+from .etl_stream import _lineage_id, publish_batch, start_foreach_batch
 
 
 _BINARY_FILE_SCHEMA = (
@@ -100,11 +100,6 @@ def start_ingest(
         finally:
             all_parsed.unpersist()
 
-    writer = (
-        stream_logs(spark, log_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        stream_logs(spark, log_dir), process_batch, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

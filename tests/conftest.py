@@ -74,4 +74,21 @@ def index_cache(tmp_path_factory):
                 shutil.rmtree(os.path.join(str(dst), sub), ignore_errors=True)
             return str(dst)
 
+        def ann_full(self, spark, sf_dir, kind, dst):
+            """Copy of the full-corpus ``kind`` ("ivf", "pq" or
+            "ivfpq") index over ``embeddings.parquet`` — the only
+            place that fills an ``annidx_{kind}_full`` key, so no two
+            tests can fill a key from different corpora."""
+            from mahjong_etl_spark.operators import similarity as sim
+
+            writer = {
+                "ivf": sim.write_ivf_index,
+                "pq": sim.write_pq_index,
+                "ivfpq": sim.write_ivfpq_index,
+            }[kind]
+            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            return self.fresh(
+                f"annidx_{kind}_full", lambda d: writer(spark, emb, d), dst
+            )
+
     return _Cache()

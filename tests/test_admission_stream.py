@@ -1,16 +1,12 @@
 """Admission gate: the streamed greedy budget fold must reproduce the
 single-process reference fold exactly, across micro-batch choppings,
-with state carried between batches — and the transformWithState
-processor must compute the identical fold through its typed state
-variables (driven via an in-memory handle; see module docstring of
-streaming/admission.py for why the v2 runtime itself can't run here)."""
+with state carried between batches."""
 
 from __future__ import annotations
 
 import json
 import os
 
-import pandas as pd
 import pytest
 
 from pyspark.sql.types import (
@@ -22,7 +18,6 @@ from pyspark.sql.types import (
 
 from mahjong_etl_spark.streaming.admission import (
     ADMIT_BUDGET,
-    AdmissionProcessor,
     admission_fold,
     admission_stream,
 )
@@ -132,112 +127,3 @@ def test_admission_stream_matches_reference_fold(spark, tmp_path, n_files):
     want = {t[1]: t for t in admission_fold(rows)}
     assert got == want
     _check_semantics(want)
-
-
-# ---------------------------------------------------------------------------
-# transformWithState processor, driven through an in-memory handle
-# ---------------------------------------------------------------------------
-
-
-class FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class FakeMapState:
-    def __init__(self):
-        self._m: dict[tuple, tuple] = {}
-
-    def keys(self):
-        return iter(list(self._m.keys()))
-
-    def containsKey(self, k):
-        return tuple(k) in self._m
-
-    def getValue(self, k):
-        return self._m[tuple(k)]
-
-    def updateValue(self, k, v):
-        self._m[tuple(k)] = tuple(v)
-
-
-class FakeHandle:
-    """In-memory StatefulProcessorHandle: one state-variable registry
-    per grouping key, mirroring the per-key view the real runtime
-    presents to handleInputRows."""
-
-    def __init__(self):
-        self.per_key: dict[tuple, dict[str, object]] = {}
-        self._key: tuple | None = None
-
-    def set_key(self, key: tuple) -> None:
-        self._key = key
-
-    def _slot(self, name: str, factory):
-        vars_ = self.per_key.setdefault(self._key, {})
-        if name not in vars_:
-            vars_[name] = factory()
-        return vars_[name]
-
-    def getValueState(self, name, schema):
-        return _Proxy(self, name, FakeValueState)
-
-    def getMapState(self, name, kschema, vschema):
-        return _Proxy(self, name, FakeMapState)
-
-
-class _Proxy:
-    """Routes every state call to the handle's CURRENT key slot, as
-    the real runtime does between handleInputRows invocations."""
-
-    def __init__(self, handle, name, factory):
-        self._h, self._n, self._f = handle, name, factory
-
-    def __getattr__(self, attr):
-        return getattr(self._h._slot(self._n, self._f), attr)
-
-
-def test_admission_processor_matches_fold_and_counts_langs():
-    rows = _mk_rows()
-    handle = FakeHandle()
-    proc = AdmissionProcessor()
-    proc.init(handle)
-
-    # drive per-source groups in two chopped "micro-batches" to prove
-    # state carry-over through the typed variables
-    cols = ("doc_id", "ts", "source", "lang", "n_tokens")
-    got = {}
-    for lo, hi in ((0, 4), (4, 8)):
-        by_source: dict[str, list] = {}
-        for r in rows:
-            by_source.setdefault(r[2], []).append(r)
-        for source, rs in by_source.items():
-            part = rs[lo:hi]
-            if not part:
-                continue
-            handle.set_key((source,))
-            batch = pd.DataFrame(part, columns=cols)
-            for out in proc.handleInputRows((source,), iter([batch]), None):
-                for t in out.itertuples(index=False):
-                    got[t.doc_id] = tuple(t)
-    want = {t[1]: t for t in admission_fold(rows)}
-    assert got == want
-    _check_semantics(want)
-
-    # MapState audit: per-source per-lang admit counts must sum to the
-    # source's accepted-doc total
-    for source, rs in (("web", None), ("books", None), ("code", None)):
-        slot = handle.per_key[(source,)]
-        lang_counts = slot["by_lang"]._m
-        n_accepted = slot["totals"]._v[0]
-        assert sum(v[0] for v in lang_counts.values()) == n_accepted
-        assert n_accepted > 0

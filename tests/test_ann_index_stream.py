@@ -30,11 +30,12 @@ def _load_emb(spark, sf_dir):
 
 
 
-def _prebuilt_ann(index_cache, kind, builder, dst, tag="full"):
+def _prebuilt_ann(index_cache, kind, builder, dst, tag):
     """Copy of a pristine prebuilt index (conftest.index_cache —
     deterministic builds trained once per session); ``tag``
     distinguishes base-corpus cuts so each (kind, corpus) trains
-    exactly once."""
+    exactly once.  Full-corpus indexes come from
+    ``index_cache.ann_full``."""
     return index_cache.fresh(f"annidx_{kind}_{tag}", builder, dst)
 
 def _drain(spark, drop_dir, index_dir, ckpt):
@@ -187,10 +188,7 @@ def test_drift_ledger_flags_distribution_shift(spark, sf_dir, tmp_path, index_ca
     n = e.count()
     assert n >= DRIFT_MIN_BATCH  # both arrival batches clear the bar
     index_dir = str(tmp_path / "index")
-    _prebuilt_ann(
-        index_cache, "ivf",
-        lambda d: write_ivf_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "ivf", index_dir)
 
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -265,8 +263,8 @@ def test_rebuild_fences_stale_checkpoint(spark, sf_dir, tmp_path, index_cache):
 
 
 def test_compact_postings_preserves_rows_and_replay_safety(
-    spark, sf_dir, tmp_path
-, index_cache):
+    spark, sf_dir, tmp_path, index_cache
+):
     """The cluster-scoped compactor (r10 verdict item 4): after many
     tiny maintenance batches, compaction must (a) cut the posting file
     count, (b) leave the posting ROWS bit-identical, (c) keep served
@@ -551,10 +549,7 @@ def test_index_lifecycle_end_to_end(spark, sf_dir, tmp_path, index_cache):
 
     # 1. build on the base corpus
     index_dir = str(tmp_path / "index")
-    _prebuilt_ann(
-        index_cache, "ivf",
-        lambda d: write_ivf_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "ivf", index_dir)
 
     # 2. maintain: one in-distribution batch, one shifted batch
     drop = tmp_path / "drop"
@@ -749,7 +744,6 @@ def test_pq_drift_flags_reconstruction_shift(spark, sf_dir, tmp_path, index_cach
     component +5 before normalization changes the DIRECTION profile)
     raise the reconstruction-error ratio and flip the flag — read
     through the SAME read_drift/rebuild_recommended surface as IVF."""
-    from mahjong_etl_spark.operators.similarity import write_pq_index
     from mahjong_etl_spark.streaming.ann_index_stream import (
         DRIFT_MIN_BATCH,
         read_drift,
@@ -761,10 +755,7 @@ def test_pq_drift_flags_reconstruction_shift(spark, sf_dir, tmp_path, index_cach
     n = e.count()
     assert n >= DRIFT_MIN_BATCH
     index_dir = str(tmp_path / "pqindex")
-    _prebuilt_ann(
-        index_cache, "pq",
-        lambda d: write_pq_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "pq", index_dir)
 
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -1021,8 +1012,8 @@ def test_drift_legacy_layouts_migrate_to_single_layout(spark, tmp_path):
 
 
 def test_ivfpq_drift_distinguishes_cells_stale_from_books_stale(
-    spark, sf_dir, tmp_path
-, index_cache):
+    spark, sf_dir, tmp_path, index_cache
+):
     """r12 verdict item 5: the IVFADC drift row carries BOTH staleness
     axes.  Three arrival batches against a frozen index: (a) the
     corpus itself — neither axis moves; (b) a BOOKS-stale shift —
@@ -1037,10 +1028,7 @@ def test_ivfpq_drift_distinguishes_cells_stale_from_books_stale(
     signal."""
     import numpy as np
 
-    from mahjong_etl_spark.operators.similarity import (
-        _read_ndarray,
-        write_ivfpq_index,
-    )
+    from mahjong_etl_spark.operators.similarity import _read_ndarray
     from mahjong_etl_spark.streaming.ann_index_stream import (
         DRIFT_MIN_BATCH,
         read_drift,
@@ -1051,10 +1039,7 @@ def test_ivfpq_drift_distinguishes_cells_stale_from_books_stale(
     n = e.count()
     assert n >= DRIFT_MIN_BATCH
     index_dir = str(tmp_path / "ivfpq")
-    _prebuilt_ann(
-        index_cache, "ivfpq",
-        lambda d: write_ivfpq_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "ivfpq", index_dir)
     cents = _read_ndarray(spark, f"{index_dir}/centroids")
 
     rows = e.collect()
@@ -1178,10 +1163,7 @@ def test_pq_index_lifecycle_end_to_end(spark, sf_dir, tmp_path, index_cache):
 
     # 1. build on the base corpus
     index_dir = str(tmp_path / "pqindex")
-    _prebuilt_ann(
-        index_cache, "pq",
-        lambda d: write_pq_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "pq", index_dir)
 
     # 2. maintain: one in-distribution batch, one the frozen books
     # cannot represent (axis-aligned spikes, the calibrated shift)
@@ -1307,10 +1289,7 @@ def test_ivfpq_index_lifecycle_end_to_end(spark, sf_dir, tmp_path, index_cache):
 
     # 1. build on the base corpus
     index_dir = str(tmp_path / "ivfpq")
-    _prebuilt_ann(
-        index_cache, "ivfpq",
-        lambda d: write_ivfpq_index(spark, e, d), index_dir,
-    )
+    index_cache.ann_full(spark, sf_dir, "ivfpq", index_dir)
 
     # 2. maintain: one in-distribution batch, one cells-stale batch
     drop = tmp_path / "drop"

@@ -75,11 +75,11 @@ def test_crash_mid_fanout_replays_without_duplicates(spark, tmp_path, monkeypatc
     out = str(tmp_path / "out_stream")
     ckpt = str(tmp_path / "ckpt")
 
-    real = es._publish_table
+    real = es._publish_table_df
     lock = threading.Lock()
     calls = {"n": 0, "failed": False}
 
-    def flaky(batch_df, t, out_dir, key, fs):
+    def flaky(df, t, out_dir, key, fs, part_col="dt"):
         with lock:
             calls["n"] += 1
             fail = t == "agaris" and not calls["failed"]
@@ -89,9 +89,9 @@ def test_crash_mid_fanout_replays_without_duplicates(spark, tmp_path, monkeypatc
             # this table's files never land; the other eight publish —
             # the worst crash point: a half-published batch, no marker
             raise RuntimeError("injected crash between sink writes")
-        real(batch_df, t, out_dir, key, fs)
+        real(df, t, out_dir, key, fs, part_col)
 
-    monkeypatch.setattr(es, "_publish_table", flaky)
+    monkeypatch.setattr(es, "_publish_table_df", flaky)
 
     q = run_etl_stream(spark, str(logs), out, ckpt)
     with pytest.raises(Exception, match="injected crash"):
@@ -156,7 +156,7 @@ def test_replay_of_committed_batch_is_noop(spark, tmp_path, monkeypatch):
 
     calls = []
     monkeypatch.setattr(
-        es, "_publish_table", lambda *a: calls.append(a[1])
+        es, "_publish_table_df", lambda *a: calls.append(a[1])
     )
     q = run_etl_stream(spark, str(logs), out, ckpt)
     assert q.awaitTermination(180), "stream did not drain in time"

@@ -131,27 +131,14 @@ def test_forget_minhash_scrubs_bands_shingles_admissions(
 def test_forget_ann_families(spark, sf_dir, tmp_path, index_cache):
     """vec_id membership leaves the postings/codes of all three ANN
     families; untouched rows survive byte-for-byte."""
-    from mahjong_etl_spark.operators.similarity import (
-        write_ivf_index,
-        write_ivfpq_index,
-        write_pq_index,
-    )
-
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
     forget = [1, 5, 9]
-    for kind, writer, table in (
-        ("ivf", write_ivf_index, "postings"),
-        ("pq", write_pq_index, "codes"),
-        ("ivfpq", write_ivfpq_index, "codes"),
+    for kind, table in (
+        ("ivf", "postings"),
+        ("pq", "codes"),
+        ("ivfpq", "codes"),
     ):
         idx = str(tmp_path / kind)
-        index_cache.fresh(
-            f"annidx_{kind}_full",
-            lambda d, w=writer: w(spark, vecs, d),
-            idx,
-        )
+        index_cache.ann_full(spark, sf_dir, kind, idx)
         before = _rows(spark, f"{idx}/{table}", ["vec_id"])
         rep = forget_from_index(spark, idx, forget)
         assert rep["kind"] == kind, kind

@@ -953,8 +953,8 @@ def test_within_batch_verify_records_exact_jaccard(spark, sf_dir, tmp_path, inde
 
 
 def test_verify_mode_self_maintains_via_persisted_shingles(
-    spark, sf_dir, tmp_path
-, index_cache):
+    spark, sf_dir, tmp_path, index_cache
+):
     """r13 ADVICE (medium) closed: verify mode WITHOUT verify_docs —
     the persisted shingle relation is the verify side, it is appended
     per batch, so a near-dup of a doc the GATE ITSELF admitted in an
@@ -987,8 +987,8 @@ def test_verify_mode_self_maintains_via_persisted_shingles(
 
 
 def test_verify_mode_fails_closed_without_shingle_source(
-    spark, sf_dir, tmp_path
-, index_cache):
+    spark, sf_dir, tmp_path, index_cache
+):
     """A bands-only index + a verify_docs snapshot that does NOT
     contain a gate-admitted doc: the near-dup's candidate cannot be
     verified, so it falls back to the band-hit flag and QUARANTINES
