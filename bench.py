@@ -11,11 +11,105 @@ per-query.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import re
 import sys
 import time
+
+
+def _ref_parse_sec(log_dir: str) -> tuple[float | None, str | None]:
+    """One timed pass of the reference's own parser over the corpus at
+    ``log_dir`` (parse only — no key minting, no parquet writes — so
+    the comparison flatters the reference), as ``(seconds, None)``.
+    ``(None, reason)`` when the reference tree is absent; any other
+    failure of the reference pass propagates."""
+    import glob
+    from collections import defaultdict
+
+    tests_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests")
+    if tests_dir not in sys.path:
+        sys.path.insert(0, tests_dir)
+    # importing the oracle puts the reference tree on sys.path
+    from reference_oracle import run_reference_date
+
+    if importlib.util.find_spec("scrape") is None:
+        return None, "reference parser tree (module `scrape`) is absent"
+    by_date = defaultdict(list)
+    for f in sorted(glob.glob(os.path.join(log_dir, "*", "*.xml"))):
+        dt = os.path.basename(os.path.dirname(f))
+        by_date[dt].append((os.path.splitext(os.path.basename(f))[0], f))
+    t0 = time.perf_counter()
+    for dt, pairs in sorted(by_date.items()):
+        run_reference_date(pairs, dt)
+    return time.perf_counter() - t0, None
+
+
+def _compact_line(out: dict, detail_name: str) -> str:
+    """The JSON line bench.py prints for the run summarized by ``out``
+    (whose full detail is ``detail_name``), within a 1600-char budget."""
+    # Whoever reads this line keeps only the LAST ~2000 chars of stdout and
+    # json-parses the final line (BENCH_r04 was `parsed: null` because
+    # the per-query dict outgrew that window).  The full name->time
+    # map can NEVER fit that window (155+ names alone are ~3 kB;
+    # zlib+base64 of the map measures 2.3 kB), so the compact line
+    # carries the COMPLETE per-query timing vector in a form that does
+    # fit (r6 item 6 + r7 item 5):
+    #   qvals       every per-query time, 2dp, in sorted(name) order
+    #   qorder      the name-vector contract, stated IN the line:
+    #               "sorted(bench registry names + mahjong_*_1k
+    #               probes)" — BENCH_r{N}.json + the same commit's
+    #               registry reconstructs the full name->time map
+    #               (tests/test_bench_contract.py pins the equality)
+    #   qnames_sha1 sha1 prefix of ",".join(sorted(names)) — detects
+    #               drift between the line and the reconstruction
+    #   queries     the K SLOWEST queries by NAME (K sized to the
+    #               budget, never truncated mid-structure) — the r7
+    #               prefix-family dict popitem()'d arbitrary families
+    #               when the line ran long
+    # BENCH_DETAIL_r{N}.json (committed, written by main) duplicates
+    # the full friendly map.
+    line = json.dumps(out)
+    if len(line) > 1500:
+        import hashlib
+
+        timings = out["queries"]
+        names = sorted(timings)
+        out_c = dict(out)
+        # the raw pair vectors stay in the DETAIL file only — the
+        # spread summarizes them, and their chars are better spent on
+        # named slowest-queries entries inside the line budget.  The
+        # load triplets compress to their 1-min components (the full
+        # 1/5/15 vectors live in the detail file): the weather report
+        # stays in the line at ~45 chars instead of ~110
+        out_c.pop("etl_vs_ref_speedup_pairs", None)
+        out_c.pop("etl_vs_ref_pairs_raw", None)
+        out_c.pop("load_run_start", None)
+        out_c.pop("load_run_end", None)
+        out_c.pop("load_pairs", None)
+        out_c["load1m"] = {
+            "s": out["load_run_start"][0],
+            "e": out["load_run_end"][0],
+            "p": out["load_pairs"],
+        }
+        out_c["n_queries"] = len(timings)
+        out_c["qvals"] = [round(timings[n], 2) for n in names]
+        out_c["qorder"] = "sorted(bench-names+mahjong_*_1k+cache-fill)"
+        out_c["qnames_sha1"] = hashlib.sha1(
+            ",".join(names).encode()
+        ).hexdigest()[:12]
+        out_c["detail"] = detail_name
+        # budget 1600 (was 1500): the reader's stdout window is ~2000
+        # chars, and the r12 load fields squeezed the named slowest
+        # list to zero at the old bar — 1600 keeps >=300 chars margin
+        slowest = sorted(timings, key=timings.get, reverse=True)
+        for k in range(12, -1, -1):
+            out_c["queries"] = {n: timings[n] for n in slowest[:k]}
+            line = json.dumps(out_c)
+            if len(line) <= 1600:
+                break
+    return line
 
 
 def main() -> None:
@@ -195,41 +289,17 @@ def main() -> None:
         "/tmp/spark_graft_synth_corpus", n_games=n_games
     )
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "tests"))
-
-    def _ref_parse_sec() -> float | None:
-        """One timed pass of the reference's own parser over the same
-        corpus (parse only — no key minting, no parquet writes — so
-        the comparison flatters the reference).  None if the reference
-        tree is absent."""
-        try:
-            import glob as _glob
-            from collections import defaultdict
-
-            from reference_oracle import run_reference_date
-
-            by_date = defaultdict(list)
-            for f in sorted(_glob.glob(os.path.join(log_dir, "*", "*.xml"))):
-                dt = os.path.basename(os.path.dirname(f))
-                by_date[dt].append(
-                    (os.path.splitext(os.path.basename(f))[0], f)
-                )
-            t0 = time.perf_counter()
-            for dt, pairs in sorted(by_date.items()):
-                run_reference_date(pairs, dt)
-            return time.perf_counter() - t0
-        except Exception:
-            return None
-
     etl_times: list[float] = []
     ref_times: list[float] = []
     pair_ratios: list[float] = []
     pair_loads: list[float] = []
+    ref_reason = None
     etl_out = tempfile.mkdtemp(prefix="mahjong_bench_etl_")
     try:
         run_etl(spark, log_dir, etl_out)  # untimed warm-up pass
 
         def _one_pair() -> None:
+            nonlocal ref_reason
             # weather report (r11 verdict item 2): the host is shared,
             # and a pair's ratio cancels common-mode load but the raw
             # seconds do not — sample the 1-min loadavg per pair so a
@@ -237,7 +307,7 @@ def main() -> None:
             # artifact alone (r11's 1.95->1.55 "regression" took a
             # controlled two-tree re-run to prove ambient)
             pair_loads.append(round(os.getloadavg()[0], 2))
-            r = _ref_parse_sec()
+            r, reason = _ref_parse_sec(log_dir)
             shutil.rmtree(etl_out, ignore_errors=True)
             t0 = time.perf_counter()
             run_etl(spark, log_dir, etl_out)
@@ -246,6 +316,8 @@ def main() -> None:
             if r is not None:
                 ref_times.append(r)
                 pair_ratios.append(r / e)
+            else:
+                ref_reason = reason
 
         for _ in range(3):
             _one_pair()
@@ -354,6 +426,9 @@ def main() -> None:
             [round(r, 3), round(e, 3)]
             for r, e in zip(ref_times, etl_times)
         ]
+    else:
+        out["etl_vs_ref_speedup"] = None
+        out["etl_vs_ref_reason"] = ref_reason
 
     # Full per-query detail always lands on disk next to this script —
     # the committed round-over-round record.  BENCH_r{N}.json (written
@@ -380,66 +455,7 @@ def main() -> None:
     with open(os.path.join(here, detail_name), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
 
-    # The driver captures only the LAST ~2000 chars of stdout and
-    # json-parses the final line (BENCH_r04 was `parsed: null` because
-    # the per-query dict outgrew that window).  The full name->time
-    # map can NEVER fit that window (155+ names alone are ~3 kB;
-    # zlib+base64 of the map measures 2.3 kB), so the compact line
-    # carries the COMPLETE per-query timing vector in a form that does
-    # fit (r6 item 6 + r7 item 5):
-    #   qvals       every per-query time, 2dp, in sorted(name) order
-    #   qorder      the name-vector contract, stated IN the line:
-    #               "sorted(bench registry names + mahjong_*_1k
-    #               probes)" — BENCH_r{N}.json + the same commit's
-    #               registry reconstructs the full name->time map
-    #               (tests/test_bench_contract.py pins the equality)
-    #   qnames_sha1 sha1 prefix of ",".join(sorted(names)) — detects
-    #               drift between the line and the reconstruction
-    #   queries     the K SLOWEST queries by NAME (K sized to the
-    #               budget, never truncated mid-structure) — the r7
-    #               prefix-family dict popitem()'d arbitrary families
-    #               when the line ran long
-    # BENCH_DETAIL_r{N}.json (committed, above) duplicates the full
-    # friendly map.
-    line = json.dumps(out)
-    if len(line) > 1500:
-        import hashlib
-
-        names = sorted(timings)
-        out_c = dict(out)
-        # the raw pair vectors stay in the DETAIL file only — the
-        # spread summarizes them, and their chars are better spent on
-        # named slowest-queries entries inside the line budget.  The
-        # load triplets compress to their 1-min components (the full
-        # 1/5/15 vectors live in the detail file): the weather report
-        # stays in the line at ~45 chars instead of ~110
-        out_c.pop("etl_vs_ref_speedup_pairs", None)
-        out_c.pop("etl_vs_ref_pairs_raw", None)
-        out_c.pop("load_run_start", None)
-        out_c.pop("load_run_end", None)
-        out_c.pop("load_pairs", None)
-        out_c["load1m"] = {
-            "s": out["load_run_start"][0],
-            "e": out["load_run_end"][0],
-            "p": out["load_pairs"],
-        }
-        out_c["n_queries"] = len(timings)
-        out_c["qvals"] = [round(timings[n], 2) for n in names]
-        out_c["qorder"] = "sorted(bench-names+mahjong_*_1k+cache-fill)"
-        out_c["qnames_sha1"] = hashlib.sha1(
-            ",".join(names).encode()
-        ).hexdigest()[:12]
-        out_c["detail"] = detail_name
-        # budget 1600 (was 1500): the driver's stdout window is ~2000
-        # chars, and the r12 load fields squeezed the named slowest
-        # list to zero at the old bar — 1600 keeps >=300 chars margin
-        slowest = sorted(timings, key=timings.get, reverse=True)
-        for k in range(12, -1, -1):
-            out_c["queries"] = {n: timings[n] for n in slowest[:k]}
-            line = json.dumps(out_c)
-            if len(line) <= 1600:
-                break
-    print(line)
+    print(_compact_line(out, detail_name))
 
 
 if __name__ == "__main__":

@@ -3,8 +3,8 @@
 Topology (the Spark rebuild of reference main.py:18-33 +
 scrape.py:612-668):
 
-  binaryFile scan -> mapInPandas(parse_game)  [one row per game,
-      nine array<struct> columns]            -> persist()
+  binaryFile scan -> byte-sized coalesce -> mapInPandas(parse_game)
+      [one row per game, nine array<struct> columns] -> persist()
     -> per-game offset window (deterministic kyoku_id minting)
     -> 9x (explode -> finalize ids -> REBALANCE(dt)
            -> write partitionBy("dt")), submitted concurrently
@@ -68,6 +68,13 @@ _EPOCH = datetime.date(1970, 1, 1)
 SMALL_SINK_ROWS = 262_144
 SINK_ROWS_PER_TASK = 131_072
 
+# Most games one parse output frame holds.  A parse task reads every
+# log of its coalesced splits (thousands at scale) in Arrow input
+# batches of up to 10,000 rows; flushing the nested-dict rows every
+# PARSE_BATCH_GAMES games bounds a Python worker's memory whatever the
+# task size.
+PARSE_BATCH_GAMES = 256
+
 # kyoku-scoped tables and the name of their final id column
 _KYOKU_KEYED = {
     "kyokus": "id",
@@ -111,8 +118,8 @@ def _parse_batches(compat: bool):
         from mahjong_etl_spark.operators.mahjong_parse import parse_game
 
         empty = {t: [] for t in TABLE_SCHEMAS}
+        rows: list[dict[str, Any]] = []
         for pdf in batches:
-            rows: list[dict[str, Any]] = []
             for path_date, game_id, content in zip(
                 pdf["dt_raw"], pdf["game_id"], pdf["content"]
             ):
@@ -145,6 +152,10 @@ def _parse_batches(compat: bool):
                         **tables,
                     }
                 )
+                if len(rows) == PARSE_BATCH_GAMES:
+                    yield pd.DataFrame(rows)
+                    rows = []
+        if rows:
             yield pd.DataFrame(rows)
 
     return fn
@@ -164,7 +175,23 @@ def parse_logs(
     scan = scan_logs(spark, log_dir, date_prefix).select(
         "dt_raw", "game_id", "content"
     )
-    return scan.mapInPandas(_parse_batches(compat), schema=PARSED_GAME_SCHEMA)
+    # The binaryFile scan charges every ~6 KB log the 4 MB
+    # openCostInBytes, so 700 games split 22 ways.  Each Python task
+    # pays a fixed ~0.22 CPU-s before parsing anything (measured on a
+    # 4-vCPU host, CPython 3.11: the worker's
+    # importlib.invalidate_caches() makes zipimport re-read
+    # pyspark.zip's directory 16x per task), so size the parse by XML
+    # bytes instead: one wave of tasks per core, more only when the
+    # bytes fill maxPartitionBytes splits.  The byte total is the file
+    # relation's sizeInBytes, known from the listing without a job; a
+    # narrow coalesce never exceeds the scan's own split count.
+    relation = scan._jdf.queryExecution().analyzed().collectLeaves().head()
+    xml_bytes = int(relation.stats().sizeInBytes())
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    tasks = max(spark.sparkContext.defaultParallelism, -(-xml_bytes // max_split))
+    return scan.coalesce(tasks).mapInPandas(
+        _parse_batches(compat), schema=PARSED_GAME_SCHEMA
+    )
 
 
 def _with_offsets(parsed: DataFrame) -> DataFrame:

@@ -104,3 +104,48 @@ def test_compact_line_shape_and_size():
     ).hexdigest()[:12] == parsed["qnames_sha1"]
     for n, v in rec.items():
         assert abs(v - timings[n]) <= 0.005 + 1e-9
+
+
+def test_ref_parse_sec_reports_absent_reference(monkeypatch, tmp_path):
+    """Without the reference tree the head-to-head probe reports no
+    time and a reason instead of raising (a pytest ``Skipped`` from the
+    oracle is a BaseException and used to end the whole bench run)."""
+    import importlib.util
+
+    import bench
+
+    real = importlib.util.find_spec
+    monkeypatch.setattr(
+        importlib.util,
+        "find_spec",
+        lambda name, *a, **k: None if name == "scrape" else real(name, *a, **k),
+    )
+    sec, reason = bench._ref_parse_sec(str(tmp_path))
+    assert sec is None
+    assert "reference parser tree" in reason
+
+
+def test_compact_line_with_null_ref_speedup_fits_budget():
+    """A run without the reference carries ``etl_vs_ref_speedup: null``
+    plus its reason and still fits the 1600-char line with the slowest
+    queries named."""
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    details = sorted(
+        f for f in os.listdir(root) if f.startswith("BENCH_DETAIL_r")
+    )
+    with open(os.path.join(root, details[-1])) as f:
+        out = {
+            k: v
+            for k, v in json.load(f).items()
+            if not k.startswith(("etl_vs_ref", "baseline_ref"))
+        }
+    out["etl_vs_ref_speedup"] = None
+    out["etl_vs_ref_reason"] = "reference parser tree (module `scrape`) is absent"
+    line = bench._compact_line(out, details[-1])
+    assert len(line) <= 1600, len(line)
+    parsed = json.loads(line)
+    assert parsed["etl_vs_ref_speedup"] is None
+    assert parsed["etl_vs_ref_reason"] == out["etl_vs_ref_reason"]
+    assert parsed["queries"] and set(parsed["queries"]) <= set(out["queries"])

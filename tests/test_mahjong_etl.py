@@ -326,3 +326,91 @@ def test_tiny_sink_path_vs_rebalance_path_identical(spark, etl_out, tmp_path, mo
             .collect()
         )
         assert a == b, table
+
+
+@pytest.fixture(scope="module")
+def sized_corpus(spark, tmp_path_factory):
+    """Enough synthetic games that the raw binaryFile scan splits into
+    more partitions than the session has cores (each ~6 KB log is
+    charged the 4 MB openCostInBytes, so a 128 MB split holds ~31),
+    and more than PARSE_BATCH_GAMES + 40 of them."""
+    from mahjong_etl_spark.sources.synth_games import generate_corpus
+
+    n_games = 40 * max(8, spark.sparkContext.defaultParallelism)
+    return generate_corpus(
+        str(tmp_path_factory.mktemp("sized_corpus")), n_games=n_games, seed=5
+    )
+
+
+def test_parse_stage_sized_by_xml_bytes(spark, sized_corpus, tmp_path):
+    """parse_logs plans about one Python task per core (more only when
+    the XML bytes fill maxPartitionBytes splits), never more than the
+    scan's own splits, and the ETL over that plan counts exactly the
+    rows the parser yields driver-side over the same files.  Neither
+    call leaves a session conf changed."""
+    from mahjong_etl_spark.operators.mahjong_parse import parse_game
+    from mahjong_etl_spark.plans.etl import parse_logs
+    from mahjong_etl_spark.schemas import TABLE_SCHEMAS
+    from mahjong_etl_spark.sources.xml_source import scan_logs
+
+    files = sorted(glob.glob(f"{sized_corpus}/*/*.xml"))
+    xml_bytes = sum(os.path.getsize(f) for f in files)
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    cores = spark.sparkContext.defaultParallelism
+    raw = scan_logs(spark, sized_corpus).rdd.getNumPartitions()
+    assert raw > cores, "corpus too small to exercise the sizing"
+    conf = spark.conf.getAll
+    tasks = parse_logs(spark, sized_corpus).rdd.getNumPartitions()
+    assert tasks <= max(cores, -(-xml_bytes // max_split))
+    assert tasks < raw
+
+    counts = run_etl(spark, sized_corpus, str(tmp_path / "out"))
+    assert spark.conf.getAll == conf
+    expected = {t: 0 for t in TABLE_SCHEMAS}
+    for f in files:
+        dt_dir, name = f.split(os.sep)[-2:]
+        with open(f, "rb") as fh:
+            tables = parse_game(
+                fh.read(),
+                name[: -len(".xml")],
+                datetime.datetime.strptime(dt_dir, "%Y%m%d").date(),
+            )
+        for t, rows in tables.items():
+            expected[t] += len(rows)
+    assert counts == {"_corrupt": 0, **expected}
+
+
+def test_parse_batches_bound_output_frames(sized_corpus):
+    """One input frame of more than PARSE_BATCH_GAMES games comes out
+    as frames of at most PARSE_BATCH_GAMES rows, quarantined rows
+    included, and their concatenation equals a one-game-per-frame run
+    row for row, in order."""
+    import pandas as pd
+
+    from mahjong_etl_spark.plans.etl import PARSE_BATCH_GAMES, _parse_batches
+
+    rows = []
+    for f in sorted(glob.glob(f"{sized_corpus}/*/*.xml"))[: PARSE_BATCH_GAMES + 40]:
+        dt_dir, name = f.split(os.sep)[-2:]
+        with open(f, "rb") as fh:
+            rows.append((dt_dir, name[: -len(".xml")], fh.read()))
+    rows.insert(3, ("20241332", "bad_date", rows[0][2]))  # month 13
+    rows.insert(PARSE_BATCH_GAMES, ("20240201", "corrupt", b"<mjloggm><GO"))
+    pdf = pd.DataFrame(rows, columns=["dt_raw", "game_id", "content"])
+    parse = _parse_batches(True)
+
+    frames = list(parse(iter([pdf])))
+    assert len(frames) > 1
+    assert all(len(f) <= PARSE_BATCH_GAMES for f in frames)
+    single = [
+        f for i in range(len(pdf)) for f in parse(iter([pdf.iloc[i : i + 1]]))
+    ]
+    got = pd.concat(frames, ignore_index=True)
+    want = pd.concat(single, ignore_index=True)
+    assert len(got) == len(want) == len(pdf)
+    assert got["game_id"].tolist() == want["game_id"].tolist() == pdf["game_id"].tolist()
+    assert got["n_kyokus"].tolist() == want["n_kyokus"].tolist()
+    errors = [e if isinstance(e, str) else None for e in got["error"]]
+    assert errors == [e if isinstance(e, str) else None for e in want["error"]]
+    assert [g for g, e in zip(got["game_id"], errors) if e] == ["bad_date", "corrupt"]
+    assert got.to_dict("records") == want.to_dict("records")
