@@ -70,24 +70,32 @@ def _compact_line(out: dict, detail_name: str) -> str:
     #               when the line ran long
     # BENCH_DETAIL_r{N}.json (committed, written by main) duplicates
     # the full friendly map.
-    line = json.dumps(out)
+    # compact separators: the ", " and ": " padding alone cost the
+    # line about 7 named slowest queries of its budget
+    line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1500:
         import hashlib
 
         timings = out["queries"]
         names = sorted(timings)
         out_c = dict(out)
-        # the raw pair vectors stay in the DETAIL file only — the
-        # spread summarizes them, and their chars are better spent on
-        # named slowest-queries entries inside the line budget.  The
-        # load triplets compress to their 1-min components (the full
+        # the raw pair vectors and the codegen compile counts stay in
+        # the DETAIL file only — their chars are better spent on named
+        # slowest-queries entries inside the line budget.  The load
+        # triplets compress to their 1-min components (the full
         # 1/5/15 vectors live in the detail file): the weather report
         # stays in the line at ~45 chars instead of ~110
-        out_c.pop("etl_vs_ref_speedup_pairs", None)
-        out_c.pop("etl_vs_ref_pairs_raw", None)
-        out_c.pop("load_run_start", None)
-        out_c.pop("load_run_end", None)
-        out_c.pop("load_pairs", None)
+        for key in (
+            "etl_vs_ref_speedup_pairs",
+            "etl_vs_ref_pairs_raw",
+            "load_run_start",
+            "load_run_end",
+            "load_pairs",
+            "codegen_compiles_warmup",
+            "codegen_compiles_timed",
+            "codegen_compiles_retimed",
+        ):
+            out_c.pop(key, None)
         out_c["load1m"] = {
             "s": out["load_run_start"][0],
             "e": out["load_run_end"][0],
@@ -106,7 +114,7 @@ def _compact_line(out: dict, detail_name: str) -> str:
         slowest = sorted(timings, key=timings.get, reverse=True)
         for k in range(12, -1, -1):
             out_c["queries"] = {n: timings[n] for n in slowest[:k]}
-            line = json.dumps(out_c)
+            line = json.dumps(out_c, separators=(",", ":"))
             if len(line) <= 1600:
                 break
     return line
@@ -121,7 +129,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
     from mahjong_etl_spark.plans.registry import registry
-    from mahjong_etl_spark.session import get_spark
+    from mahjong_etl_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("mahjong-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -133,6 +141,7 @@ def main() -> None:
     # line, so untimed warm-up work is visible in the artifact instead
     # of silently absorbed.
     t_warm0 = time.perf_counter()
+    compiles_warm0 = codegen_compiles(spark)
 
     # warm-up: JVM + parquet footer caches, one tiny job, and the
     # Python worker fleet (first Arrow-UDF stage otherwise pays ~32
@@ -197,6 +206,7 @@ def main() -> None:
         # kill the whole bench — the queries themselves will report it
         print(f"warm-up: quantizer prewarm skipped: {exc}", file=sys.stderr)
     warmup_sec = time.perf_counter() - t_warm0
+    compiles_warmup = codegen_compiles(spark) - compiles_warm0
 
     # The text-dedup family's shared relations (shingle sets + the
     # r14 pre-threshold co-occurrence counts + verified Jaccard
@@ -225,8 +235,10 @@ def main() -> None:
         return time.perf_counter() - t0
 
     timings: dict[str, float] = {}
+    compiles_timed0 = codegen_compiles(spark)
     for name in sorted(reg):
         timings[name] = run_one(name)
+    compiles_timed = codegen_compiles(spark) - compiles_timed0
 
     # The host is shared: a run occasionally eats a multi-second
     # scheduling stall that lands on one arbitrary query.  Re-time the
@@ -246,10 +258,12 @@ def main() -> None:
     med = sorted(timings.values())[len(timings) // 2]
     first = sorted(timings)[0]
     n_retimed = 0
+    compiles_retime0 = codegen_compiles(spark)
     for name, t in list(timings.items()):
         if name == first or t >= max(2.0, 3 * med):
             timings[name] = min(t, run_one(name))
             n_retimed += 1
+    compiles_retimed = codegen_compiles(spark) - compiles_retime0
 
     # the family-cache fill joins the per-query map AFTER the outlier
     # pass: it is a one-off cache fill, so a "re-time and keep the
@@ -392,6 +406,13 @@ def main() -> None:
     # the line itself.
     out["warmup_sec"] = round(warmup_sec, 3)
     out["n_retimed"] = n_retimed
+    # codegen cache fills (Janino compiles) of the warm-up, the first
+    # timed pass over the registry and the re-time pass: a compile in
+    # the re-time pass is a class the cache evicted in between, or a
+    # plan variant the first run did not build
+    out["codegen_compiles_warmup"] = compiles_warmup
+    out["codegen_compiles_timed"] = compiles_timed
+    out["codegen_compiles_retimed"] = compiles_retimed
     # mechanical filter for round comparisons (r12 verdict item 7):
     # a run that STARTED on a loaded host (1-min loadavg > 4 before
     # any Spark work of its own) is flagged so driver-side

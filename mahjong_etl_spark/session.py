@@ -17,6 +17,13 @@ config block is what we would ship to a 1000-executor cluster — only
 - ``timeZone=UTC``: the reference stores dates as UTC midnight
   (reference main.py:23); all timestamp semantics are pinned UTC so
   results do not depend on the host zone.
+- ``spark.sql.codegen.cache.maxEntries``: the JVM-wide cache of
+  compiled whole-stage/expression classes.  One ``run_etl`` plus one
+  round of star queries generates ~190 distinct classes; at Spark's
+  default of 100 that cyclic access pattern evicts every class before
+  its reuse, so Janino recompiled the whole set each cycle.
+  ``CODEGEN_CACHE_ENTRIES`` holds the working set (``codegen_compiles``
+  counts the compiles).
 """
 
 from __future__ import annotations
@@ -24,6 +31,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Sized from the largest measured working set: one bench.py session
+# generates ~2,080 classes (warm-up + the registry pass), and at 2,000
+# entries its re-timed queries recompiled 15 classes; at 4,000, none.
+CODEGEN_CACHE_ENTRIES = 4000
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM (all sessions): a codegen
+    cache hit does not count, so a delta of 0 over a pass means every
+    generated class of that pass was reused."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def local_rows_df(spark: SparkSession, rows: list, schema: str):
@@ -74,5 +94,8 @@ def get_spark(app_name: str = "mahjong-etl-spark") -> SparkSession:
         # broadcast; 64 MiB is still far below executor memory at scale.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # ~190 classes per ETL + star cycle vs the default 100: cyclic
+        # access evicted each class before reuse (0 % hits)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )

@@ -50,10 +50,11 @@ def test_qnames_reconstruction_matches_committed_detail():
 
 
 def test_compact_line_shape_and_size():
-    """Build the compact line exactly as bench.py would from the
-    newest committed detail: it must fit the 1500-char budget and its
-    qvals/qnames_sha1 must round-trip the full map."""
-    import re
+    """Build the compact line with bench.py's own builder from the
+    newest committed detail: it must fit the 1600-char budget, name at
+    least the 5 slowest queries, and its qvals/qnames_sha1 must
+    round-trip the full map."""
+    import bench
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     details = sorted(
@@ -62,40 +63,15 @@ def test_compact_line_shape_and_size():
     with open(os.path.join(root, details[-1])) as f:
         out = json.load(f)
     timings = out["queries"]
-
     names = sorted(timings)
-    out_c = dict(out)
-    # mirrors bench.py: the raw pair vectors and full 1/5/15 load
-    # triplets live in the detail file only; the compact line keeps
-    # median + spread + the 1-min load components
-    out_c.pop("etl_vs_ref_speedup_pairs", None)
-    out_c.pop("etl_vs_ref_pairs_raw", None)
-    out_c.pop("load_run_start", None)
-    out_c.pop("load_run_end", None)
-    out_c.pop("load_pairs", None)
-    if "load_run_start" in out:  # r12+ detail files carry the weather
-        out_c["load1m"] = {
-            "s": out["load_run_start"][0],
-            "e": out["load_run_end"][0],
-            "p": out["load_pairs"],
-        }
-    out_c["n_queries"] = len(timings)
-    out_c["qvals"] = [round(timings[n], 2) for n in names]
-    out_c["qorder"] = "sorted(bench-names+mahjong_*_1k+cache-fill)"
-    out_c["qnames_sha1"] = hashlib.sha1(",".join(names).encode()).hexdigest()[:12]
-    out_c["detail"] = details[-1]
-    slowest = sorted(timings, key=timings.get, reverse=True)
-    for k in range(12, -1, -1):
-        out_c["queries"] = {n: timings[n] for n in slowest[:k]}
-        line = json.dumps(out_c)
-        if len(line) <= 1600:
-            break
+    line = bench._compact_line(out, details[-1])
 
     assert len(line) <= 1600, f"compact line still {len(line)} chars"
     parsed = json.loads(line)
     assert len(parsed["qvals"]) == parsed["n_queries"] == len(timings)
     # the slowest-queries dict survives whole with REAL query names
-    assert parsed["queries"] and set(parsed["queries"]) <= set(timings)
+    assert len(parsed["queries"]) >= 5
+    assert set(parsed["queries"]) <= set(timings)
     assert parsed["qorder"] == "sorted(bench-names+mahjong_*_1k+cache-fill)"
     # the sha1 pin + sorted order reconstructs the full map
     rec = dict(zip(names, parsed["qvals"]))
@@ -148,4 +124,5 @@ def test_compact_line_with_null_ref_speedup_fits_budget():
     parsed = json.loads(line)
     assert parsed["etl_vs_ref_speedup"] is None
     assert parsed["etl_vs_ref_reason"] == out["etl_vs_ref_reason"]
-    assert parsed["queries"] and set(parsed["queries"]) <= set(out["queries"])
+    assert len(parsed["queries"]) >= 5
+    assert set(parsed["queries"]) <= set(out["queries"])
