@@ -6,6 +6,13 @@ becomes a queryable view with ``dt`` as the partition-pruning column,
 plus the ER diagram's intended wide ``games`` exposed as
 ``games_wide`` (games ⋈ rules 1:1 — SURVEY §1.5: the seven rule flags
 were designed into games but physically live in rules).
+
+Each view is read with its declared schema (``schemas.py`` plus the
+``dt DATE`` partition column), so registering runs no Spark job: a
+schemaless ``spark.read.parquet`` runs one footer-inference job per
+table, nine ~0.1 s job floors per daily ingest.  The writers' output
+equals these schemas (pinned by tests/test_ingest_floors.py), so the views
+read the same columns and types an inferred read would.
 """
 
 from __future__ import annotations
@@ -13,19 +20,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DateType, StructField, StructType
 
-from ..schemas import EXPERIMENTS, TABLE_SCHEMAS
+from ..schemas import EXPERIMENTS, PAIYAMAS, TABLE_SCHEMAS
 
-ALL_TABLES = list(TABLE_SCHEMAS) + ["paiyamas"]
+VIEW_SCHEMAS = {
+    t: StructType(s.fields + [StructField("dt", DateType())])
+    for t, s in {**TABLE_SCHEMAS, "paiyamas": PAIYAMAS}.items()
+}
 
 
 def register_tables(spark: SparkSession, root: str) -> list[str]:
     registered = []
-    for table in ALL_TABLES:
+    for table, schema in VIEW_SCHEMAS.items():
         path = f"{root}/{table}"
         if not os.path.isdir(path):
             continue
-        spark.read.parquet(path).createOrReplaceTempView(table)
+        spark.read.schema(schema).parquet(path).createOrReplaceTempView(table)
         registered.append(table)
     if "games" in registered and "rules" in registered:
         spark.sql(

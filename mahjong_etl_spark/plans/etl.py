@@ -5,9 +5,12 @@ scrape.py:612-668):
 
   binaryFile scan -> byte-sized coalesce -> mapInPandas(parse_game)
       [one row per game, nine array<struct> columns] -> persist()
-    -> per-game offset window (deterministic kyoku_id minting)
-    -> 9x (explode -> finalize ids -> REBALANCE(dt)
-           -> write partitionBy("dt")), submitted concurrently
+    -> one bookkeeping aggregate (row counts, dates, corrupt games)
+    -> per-game offset window over one partition per date
+       (deterministic kyoku_id minting) -> persist(), filled once
+    -> 9x (explode -> broadcast offsets + finalize ids [kyoku-keyed]
+           -> narrow coalesce or REBALANCE(dt) -> write partitionBy("dt")),
+       all nine submitted together
 
 Design points:
 - ONE parse per XML: the parsed DataFrame is persisted before the
@@ -194,15 +197,18 @@ def parse_logs(
     )
 
 
-def _with_offsets(parsed: DataFrame) -> DataFrame:
+def _with_offsets(parsed: DataFrame, n_dates: int) -> DataFrame:
     """Per-game kyoku-ordinal offset: running total of preceding games'
-    hand counts within the date, games ordered by game_id."""
+    hand counts within the date, games ordered by game_id.  The window
+    runs over a hash exchange on ``dt`` with one partition per date,
+    which satisfies its distribution, so it adds no second exchange."""
     w = (
         Window.partitionBy("dt")
         .orderBy("game_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return parsed.select("dt", "game_id", "days", "n_kyokus").withColumn(
+    games = parsed.select("dt", "game_id", "days", "n_kyokus")
+    return games.repartition(max(1, n_dates), "dt").withColumn(
         "kyoku_offset", F.coalesce(F.sum("n_kyokus").over(w), F.lit(0))
     )
 
@@ -308,9 +314,16 @@ def run_etl(
             spark, f"{out_dir}/_corrupt", sorted(processed_dts - corrupt_dts)
         )
         good = parsed.where(F.col("error").isNull())
-        # persisted: five kyoku-keyed table writes broadcast this —
-        # without the persist each job re-runs the window shuffle
-        offsets = _with_offsets(good).persist()
+        # Five kyoku-keyed sinks broadcast the offsets, so they are
+        # built ONCE here, before the fanout: persisted and filled by
+        # a count, the broadcasts read a filled cache instead of five
+        # jobs racing to fill it.  The window's exchange has one
+        # partition per processed date (known from the bookkeeping
+        # aggregate), not spark.sql.shuffle.partitions: AQE does not
+        # coalesce partitions inside a cache, so each broadcast paid
+        # that many near-empty tasks.
+        offsets = _with_offsets(good, len(processed_dts)).persist()
+        offsets.count()
         sizes = {t: sum(int(r[t]) for r in per_dt) for t in TABLE_SCHEMAS}
 
         def write_one(table: str) -> None:
@@ -351,8 +364,8 @@ def run_etl(
             )
 
         # The nine sinks are independent narrow jobs over the SAME
-        # persisted parse (materialized above by the corrupt count, so
-        # no cache-fill races), each writing its own directory.
+        # persisted parse and offsets (both materialized above, so no
+        # cache-fill races), each writing its own directory.
         # Submitting them from a thread pool lets the scheduler
         # interleave their tasks instead of paying nine serial
         # job-latency floors — the sink fanout was ~4/5 of ETL wall

@@ -126,3 +126,43 @@ def test_compact_line_with_null_ref_speedup_fits_budget():
     assert parsed["etl_vs_ref_reason"] == out["etl_vs_ref_reason"]
     assert len(parsed["queries"]) >= 5
     assert set(parsed["queries"]) <= set(out["queries"])
+
+
+def test_compact_line_worst_case_widths_names_probes_and_slowest():
+    """Every number at the widest it prints: each timing keeps its
+    whole seconds with the widest 3-dp fraction (so every 2-dp qval is
+    as wide as its magnitude allows), the probes and the dozen slowest
+    queries take two-digit seconds, the loads two-digit values and the
+    set wall four digits; the run lacks the reference (null speedup
+    plus its reason).  The line must still fit 1600 chars, carry both
+    ``mahjong_*_1k`` probes and name at least 5 other queries."""
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    details = sorted(
+        f for f in os.listdir(root) if f.startswith("BENCH_DETAIL_r")
+    )
+    with open(os.path.join(root, details[-1])) as f:
+        out = {
+            k: v
+            for k, v in json.load(f).items()
+            if not k.startswith(("etl_vs_ref", "baseline_ref"))
+        }
+    out["etl_vs_ref_speedup"] = None
+    out["etl_vs_ref_reason"] = "reference parser tree (module `scrape`) is absent"
+    timings = {n: int(t) + 0.987 for n, t in out["queries"].items()}
+    slowest = sorted(timings, key=timings.get, reverse=True)[:12]
+    for n in [*bench.PROBES, *slowest]:
+        timings[n] = 10 + timings[n] % 10
+    out["queries"] = timings
+    out["value"] = 9999.999
+    out["warmup_sec"] = 99.999
+    out["tenhou_source_actions_1k_sec"] = 99.999
+    for k in ("load_run_start", "load_run_end", "load_pairs"):
+        out[k] = [99.99] * len(out[k])
+    line = bench._compact_line(out, details[-1])
+    assert len(line) <= 1600, len(line)
+    named = json.loads(line)["queries"]
+    assert set(bench.PROBES) <= set(named)
+    assert len(set(named) - set(bench.PROBES)) >= 5, named
+    assert set(named) <= set(timings)
