@@ -7,8 +7,9 @@ scrape.py:612-668):
       [one row per game, nine array<struct> columns] -> persist()
     -> one bookkeeping aggregate (row counts, dates, corrupt games)
     -> per-game offset window over one partition per date
-       (deterministic kyoku_id minting) -> persist(), filled once
-    -> 9x (explode -> broadcast offsets + finalize ids [kyoku-keyed]
+       (deterministic kyoku_id minting), broadcast-joined onto the
+       games -> persist(), filled once
+    -> 9x (explode -> finalize ids [kyoku-keyed]
            -> narrow coalesce or REBALANCE(dt) -> write partitionBy("dt")),
        all nine submitted together
 
@@ -213,15 +214,16 @@ def _with_offsets(parsed: DataFrame, n_dates: int) -> DataFrame:
     )
 
 
-def table_df(parsed: DataFrame, offsets: DataFrame, table: str) -> DataFrame:
-    """Explode one table out of the parsed-games DataFrame and mint
-    final kyoku ids (0 for pre-INIT rows, matching the reference's
-    initial kyoku_id)."""
-    ex = parsed.select("dt", "days", "game_id", F.explode(table).alias("r"))
+def table_df(games: DataFrame, table: str) -> DataFrame:
+    """Explode one table out of the per-game DataFrame, which carries
+    each game's ``kyoku_offset``, and mint final kyoku ids (0 for
+    pre-INIT rows, matching the reference's initial kyoku_id)."""
+    ex = games.select(
+        "dt", "days", "kyoku_offset", F.explode(table).alias("r")
+    )
     key = _KYOKU_KEYED.get(table)
     if key is None:
         return ex.select("dt", "r.*")
-    ex = ex.join(F.broadcast(offsets.select("dt", "game_id", "kyoku_offset")), ["dt", "game_id"])
     minted = F.when(F.col("r.kyoku_local").isNull(), F.lit(0)).otherwise(
         F.col("days") * 100000 + F.col("kyoku_offset") + F.col("r.kyoku_local")
     )
@@ -269,7 +271,7 @@ def run_etl(
     prior_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     parsed = parse_logs(spark, log_dir, compat, date_prefix).persist()
-    offsets = None
+    games = None
     try:
         # ONE aggregate pass over the (cache-filling) parse answers
         # every piece of driver bookkeeping this run needs — corrupt
@@ -314,16 +316,20 @@ def run_etl(
             spark, f"{out_dir}/_corrupt", sorted(processed_dts - corrupt_dts)
         )
         good = parsed.where(F.col("error").isNull())
-        # Five kyoku-keyed sinks broadcast the offsets, so they are
-        # built ONCE here, before the fanout: persisted and filled by
-        # a count, the broadcasts read a filled cache instead of five
-        # jobs racing to fill it.  The window's exchange has one
-        # partition per processed date (known from the bookkeeping
-        # aggregate), not spark.sql.shuffle.partitions: AQE does not
-        # coalesce partitions inside a cache, so each broadcast paid
-        # that many near-empty tasks.
-        offsets = _with_offsets(good, len(processed_dts)).persist()
-        offsets.count()
+        # The five kyoku-keyed sinks need each game's kyoku offset: it
+        # is joined onto the games ONCE here, before the fanout, and
+        # persisted and filled by a count, so no sink runs a join of its
+        # own, whose broadcast job would queue behind the other sinks'
+        # tasks and make each write's start depend on the order the
+        # nine threads submit their jobs.  The window's exchange has one partition per processed date
+        # (known from the bookkeeping aggregate), not
+        # spark.sql.shuffle.partitions, so it costs no near-empty tasks.
+        offsets = _with_offsets(good, len(processed_dts))
+        games = good.join(
+            F.broadcast(offsets.select("dt", "game_id", "kyoku_offset")),
+            ["dt", "game_id"],
+        ).persist()
+        games.count()
         sizes = {t: sum(int(r[t]) for r in per_dt) for t in TABLE_SCHEMAS}
 
         def write_one(table: str) -> None:
@@ -344,7 +350,7 @@ def run_etl(
             # threshold (any real backfill) keeps the REBALANCE(dt)
             # shuffle, which clusters rows by date AND splits a hot
             # date across writers by shuffle-block size.
-            df = table_df(good, offsets, table)
+            df = table_df(games, table)
             if sizes[table] <= SMALL_SINK_ROWS:
                 df = df.coalesce(
                     max(1, -(-sizes[table] // SINK_ROWS_PER_TASK))
@@ -364,15 +370,18 @@ def run_etl(
             )
 
         # The nine sinks are independent narrow jobs over the SAME
-        # persisted parse and offsets (both materialized above, so no
-        # cache-fill races), each writing its own directory.
+        # persisted games (materialized above, so no cache-fill races),
+        # each writing its own directory.
         # Submitting them from a thread pool lets the scheduler
         # interleave their tasks instead of paying nine serial
         # job-latency floors — the sink fanout was ~4/5 of ETL wall
         # time when serial.  On a cluster the same applies: concurrent
-        # jobs fill idle executors.
+        # jobs fill idle executors.  Largest table first: the scheduler
+        # runs tasks in job-submission order, so the widest sink (actions,
+        # ~90 % of a day's rows) never waits behind eight small ones.
+        order = sorted(TABLE_SCHEMAS, key=sizes.get, reverse=True)
         with ThreadPoolExecutor(max_workers=len(TABLE_SCHEMAS)) as pool:
-            futures = {t: pool.submit(write_one, t) for t in TABLE_SCHEMAS}
+            futures = {t: pool.submit(write_one, t) for t in order}
             for fut in futures.values():
                 fut.result()
 
@@ -391,8 +400,8 @@ def run_etl(
         return {"_corrupt": n_corrupt, **sizes}
     finally:
         parsed.unpersist()
-        if offsets is not None:
-            offsets.unpersist()
+        if games is not None:
+            games.unpersist()
         if prior_mode is None:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:

@@ -87,12 +87,10 @@ def start_ingest(
             # for the hash-based id by folding the date term into the
             # per-game offset (see module docstring)
             hash_base = F.shiftrightunsigned(F.xxhash64("game_id"), 8) * 100
-            offsets = parsed.select("dt", "game_id", "days", "n_kyokus").withColumn(
+            games = parsed.withColumn(
                 "kyoku_offset", hash_base - F.col("days") * 100000
             )
-            tables = {
-                t: table_df(parsed, offsets, t) for t in TABLE_SCHEMAS
-            }
+            tables = {t: table_df(games, t) for t in TABLE_SCHEMAS}
             tables["_corrupt"] = all_parsed.where(
                 F.col("error").isNotNull()
             ).select("dt", "game_id", "error")

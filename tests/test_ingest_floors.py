@@ -1,7 +1,9 @@
 """Fixed per-call costs of the daily ingest: ``run_etl`` sizes its
 kyoku-offset window by the number of dates, not by
-``spark.sql.shuffle.partitions``, and ``register_tables`` reads every
-view with its declared schema, so it submits no Spark job."""
+``spark.sql.shuffle.partitions``, its sinks read the offsets from the
+games they explode instead of joining them each, and
+``register_tables`` reads every view with its declared schema, so it
+submits no Spark job."""
 
 from __future__ import annotations
 
@@ -11,9 +13,10 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from mahjong_etl_spark.plans.catalog import VIEW_SCHEMAS, register_tables
-from mahjong_etl_spark.plans.etl import run_etl
+from mahjong_etl_spark.plans.etl import parse_logs, run_etl, table_df
 from mahjong_etl_spark.plans.mahjong_queries import FIXTURE_LOGS
 from mahjong_etl_spark.schemas import TABLE_SCHEMAS
 from mahjong_etl_spark.sources.paiyama import write_walls
@@ -70,6 +73,15 @@ def test_etl_tasks_do_not_follow_shuffle_partitions(spark, tmp_path):
         a = spark.read.parquet(f"{out_a}/{t}")
         b = spark.read.parquet(f"{out_b}/{t}")
         assert canon(a) == canon(b), f"table {t} differs"
+
+
+def test_sinks_plan_no_join(spark):
+    # a join per kyoku-keyed sink ran a broadcast job of its own inside
+    # the fanout, queued behind the other sinks' tasks
+    games = parse_logs(spark, FIXTURE_LOGS).withColumn("kyoku_offset", F.lit(0))
+    for t in TABLE_SCHEMAS:
+        plan = table_df(games, t)._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Broadcast" not in plan, (t, plan)
 
 
 def _batch_root(spark, root):
