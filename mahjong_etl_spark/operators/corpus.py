@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 from ..functions.text import duckdb_shingles_sql
 from ..functions.goldens import golden_oracle
 from ..plans.registry import query
+from ..session import snapshot_cache
 from ..sources.tables import load, load_spread
 from .dedup import (
     JACCARD_THRESHOLD,
@@ -236,28 +237,21 @@ def connected_components(
         free(sym_ids)
 
 
-# (sf_dir) -> (owning SparkSession, final CC label table).  r14
-# (guide §2.4): dedup_connected_components and corpus_canonical_docs
-# both need the SAME components over the SAME production pairs, and
-# each invocation re-ran the whole iterative loop (contraction pass +
-# 2-3 checkpoint/count rounds — the loop's cost is its per-round job
+# The final CC label table.  r14 (guide §2.4):
+# dedup_connected_components and corpus_canonical_docs both need the
+# SAME components over the SAME production pairs, and each invocation
+# re-ran the whole iterative loop (contraction pass + 2-3
+# checkpoint/count rounds — the loop's cost is its per-round job
 # floor, not data size).  The final label table is already
 # materialized in executor storage by the loop's own localCheckpoint,
 # so caching the handle makes the second consumer a free lookup.  The
 # labels are (id, cluster_id) — node-bounded, orders of magnitude
 # smaller than the corpus at any scale.
-_CC_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached connected components over the production
-    near-dup pairs relation."""
-    hit = _CC_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    comp = connected_components(corpus_jaccard_pairs(spark, sf_dir))
-    _CC_CACHE[sf_dir] = (spark, comp)
-    return comp
+    """Connected components over the production near-dup pairs
+    relation, once per snapshot."""
+    return connected_components(corpus_jaccard_pairs(spark, sf_dir))
 
 
 # DuckDB mirror of pairs -> transitive closure -> (id, cluster_id) —

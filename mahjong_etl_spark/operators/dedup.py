@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.text import duckdb_shingles_sql, shingles_expr
 from ..functions.goldens import golden_oracle
 from ..plans.registry import query
+from ..session import scratch_dir, snapshot, snapshot_cache
 from ..sources.tables import load, load_spread
 
 # Committed golden outputs for the hash-based strategies whose
@@ -137,13 +138,9 @@ def shingle_sets(df: DataFrame, n: int = 3) -> DataFrame:
     return df.select("doc_id", shingles_expr(n).alias("shingles"))
 
 
-# (sf_dir, n) -> (owning SparkSession, persisted shingle-set DataFrame).
-# Keyed per session object so a stopped/recreated session recomputes.
-_SHINGLE_CACHE: dict[tuple[str, int], tuple[SparkSession, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
-    """Session-cached, persisted shingle sets for the documents corpus.
+    """Persisted shingle sets for the documents corpus, once per snapshot.
 
     ``dedup_ngram_jaccard``, ``dedup_minhash_lsh``'s verify step, and
     ``dedup_connected_components`` all consume the same
@@ -152,22 +149,14 @@ def corpus_shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFra
     projection is computed once and served from executor storage
     (MEMORY_AND_DISK — spills, never recomputes) instead of three
     times.  This is the 100 TB "materialize the shingle pass once per
-    corpus snapshot" move expressed session-locally; the cache holds
-    one entry per (corpus, n) and is invalidated by session identity,
-    so correctness never depends on it.
+    corpus snapshot" move expressed session-locally.
     """
-    key = (sf_dir, n)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    sh = shingle_sets(load_spread(spark, sf_dir, "documents"), n).persist()
-    _SHINGLE_CACHE[key] = (spark, sh)
-    return sh
+    return shingle_sets(load_spread(spark, sf_dir, "documents"), n).persist()
 
 
-# (sf_dir) -> (owning SparkSession, persisted co-occurrence counts) —
-# the PRE-threshold (doc_a, doc_b, common, n_a, n_b) relation at the
-# production parameters (n=3, MAX_SHINGLE_DF cap).  r14 (guide §2.4 /
+# The persisted co-occurrence counts — the PRE-threshold (doc_a,
+# doc_b, common, n_a, n_b) relation at the production parameters
+# (n=3, MAX_SHINGLE_DF cap).  r14 (guide §2.4 /
 # §5): the Jaccard pair listing, connected-components clustering,
 # canonical selection, the ensemble's jaccard leg AND the containment
 # query all run the IDENTICAL explode → postings-keyed shuffle →
@@ -183,41 +172,27 @@ def corpus_shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFra
 # (bounded by Σ k·(k-1)/2 over shingle postings, k <= MAX_SHINGLE_DF;
 # 1.13M thin rows at sf0.1), so the persist stores what one shuffle
 # wrote instead of shuffling it twice.
-_COMMON_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-# (sf_dir) -> (owning SparkSession, derived verified Jaccard pairs) —
-# a thin filter over the persisted common relation (no second
-# persist: the parent is materialized, the filter is narrow).
-_PAIRS_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_common_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached, persisted pre-threshold co-occurrence counts
-    for the documents corpus at the production parameters."""
-    hit = _COMMON_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    common = _common_shingle_pairs(
+    """Persisted pre-threshold co-occurrence counts for the documents
+    corpus at the production parameters, once per snapshot."""
+    return _common_shingle_pairs(
         corpus_shingle_sets(spark, sf_dir), MAX_SHINGLE_DF
     ).persist()
-    _COMMON_CACHE[sf_dir] = (spark, common)
-    return common
 
 
+@snapshot_cache
 def corpus_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached near-dup pairs for the documents corpus at the
-    production parameters.  Clustering consumes exactly the pairs the
+    """Near-dup pairs for the documents corpus at the production
+    parameters, once per snapshot: a thin filter over the persisted
+    common relation (no second persist: the parent is materialized,
+    the filter is narrow).  Clustering consumes exactly the pairs the
     pair query emits — deriving both from the shared persisted
     common-counts relation makes the reuse a stated invariant rather
     than a coincidence of equal parameters."""
-    hit = _PAIRS_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    pairs = _jaccard_from_common(
+    return _jaccard_from_common(
         corpus_common_pairs(spark, sf_dir), JACCARD_THRESHOLD
     )
-    _PAIRS_CACHE[sf_dir] = (spark, pairs)
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -595,33 +570,31 @@ def _bucket_pairs(
     return in_bucket.unionByName(overflow).distinct()
 
 
-# (applicationId, plan semanticHash) -> duplicate-stats row.  The
-# deciding aggregate is one blocking job; a session typically asks
-# for the same corpus more than once (dedup_minhash_lsh AND
-# dedup_ensemble both call minhash_lsh_pairs over the documents
-# scan), so the row is cached per logical plan.  Assumes the files
-# under an already-queried plan are immutable for the session — the
-# same contract every session-level cache in this package carries.
-_DUP_STATS_CACHE: dict[tuple, object] = {}
-
-
 def _dup_stats(df: DataFrame):
+    """The duplicate-stats row of ``df``, a snapshot keyed on its plan's
+    ``semanticHash()``.  The deciding aggregate is one blocking job; a
+    session typically asks for the same corpus more than once
+    (dedup_minhash_lsh AND dedup_ensemble both call minhash_lsh_pairs
+    over the documents scan)."""
+
+    def fill():
+        return df.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_distinct(F.xxhash64("text")).alias("n_texts"),
+        ).first()
+
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df.semanticHash(),
-        )
+        plan = df.semanticHash()
     except Exception:
-        key = None
-    if key is not None and key in _DUP_STATS_CACHE:
-        return _DUP_STATS_CACHE[key]
-    row = df.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct(F.xxhash64("text")).alias("n_texts"),
-    ).first()
-    if key is not None:
-        _DUP_STATS_CACHE[key] = row
-    return row
+        return fill()
+    return snapshot(df.sparkSession, "_dup_stats", (plan,), fill)
+
+
+@snapshot_cache
+def corpus_dup_stats(spark: SparkSession, sf_dir: str):
+    """``_dup_stats`` of the documents scan dedup_minhash_lsh and
+    dedup_ensemble decide on, as a named fill the warm-up can reach."""
+    return _dup_stats(load_spread(spark, sf_dir, "documents"))
 
 
 def minhash_lsh_pairs(
@@ -1219,9 +1192,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import corpus_embeddings
 
-    e = corpus_embeddings(spark, sf_dir)
-    cents = _sem_centroids(spark, sf_dir, e)
-    return _sem_dedup(spark, e, cents)
+    return _sem_dedup(
+        spark, corpus_embeddings(spark, sf_dir), _sem_centroids(spark, sf_dir)
+    )
 
 
 def _sem_k(e: DataFrame) -> int:
@@ -1235,10 +1208,11 @@ def _sem_k(e: DataFrame) -> int:
     return min(SEM_K_CAP, max(IVF_CLUSTERS, e.count() // 128))
 
 
-def _sem_centroids(spark: SparkSession, sf_dir: str, e: DataFrame):
-    from .similarity import IVF_LLOYD_ITERS, corpus_centroids
+@snapshot_cache
+def _sem_centroids(spark: SparkSession, sf_dir: str):
+    from .similarity import corpus_centroids, corpus_embeddings
 
-    return corpus_centroids(spark, sf_dir, _sem_k(e), IVF_LLOYD_ITERS)
+    return corpus_centroids(spark, sf_dir, _sem_k(corpus_embeddings(spark, sf_dir)))
 
 
 def _sem_dedup(spark: SparkSession, e: DataFrame, centroids) -> DataFrame:
@@ -1383,26 +1357,15 @@ def _sem_dedup(spark: SparkSession, e: DataFrame, centroids) -> DataFrame:
     )
 
 
-# (sf_dir) -> scratch dir holding the persisted SemDeDup quantizer —
-# trained + written once per process, read COLD by the persisted query
-# (same once-per-process pattern as similarity._ensure_ivf_index)
-_SEM_QUANT_DIR: dict[str, str] = {}
-
-
+@snapshot_cache
 def _ensure_sem_quantizer(spark: SparkSession, sf_dir: str) -> str:
-    from .similarity import _write_ndarray, corpus_embeddings
+    """A scratch dir holding the persisted SemDeDup quantizer, trained
+    and written once per snapshot, read COLD by the persisted query."""
+    from .similarity import _write_ndarray
 
-    hit = _SEM_QUANT_DIR.get(sf_dir)
-    if hit is None:
-        import tempfile
-
-        hit = tempfile.mkdtemp(prefix="sem_quantizer_")
-        e = corpus_embeddings(spark, sf_dir)
-        _write_ndarray(
-            spark, _sem_centroids(spark, sf_dir, e), f"{hit}/centroids"
-        )
-        _SEM_QUANT_DIR[sf_dir] = hit
-    return hit
+    path = scratch_dir("sem_quantizer_")
+    _write_ndarray(spark, _sem_centroids(spark, sf_dir), f"{path}/centroids")
+    return path
 
 
 @query(

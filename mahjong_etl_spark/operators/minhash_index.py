@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import query
+from ..session import scratch_dir, snapshot_cache
 from ..sources.tables import load_spread
 from .dedup import (
     BANDS,
@@ -469,20 +470,11 @@ def query_minhash_index(
     )
 
 
-_MINHASH_INDEX_DIR: dict[str, str] = {}
-
-
+@snapshot_cache
 def _ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    hit = _MINHASH_INDEX_DIR.get(sf_dir)
-    if hit is None:
-        import tempfile
-
-        hit = tempfile.mkdtemp(prefix="minhash_index_")
-        write_minhash_index(
-            spark, load_spread(spark, sf_dir, "documents"), hit
-        )
-        _MINHASH_INDEX_DIR[sf_dir] = hit
-    return hit
+    path = scratch_dir("minhash_index_")
+    write_minhash_index(spark, load_spread(spark, sf_dir, "documents"), path)
+    return path
 
 
 @query(

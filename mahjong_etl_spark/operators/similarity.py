@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.goldens import golden_oracle
 from ..plans.registry import query
+from ..session import scratch_dir, snapshot_cache
 from ..sources.tables import load, load_spread
 from .classifier import _GOLDEN_DIR, _SIG_SQL
 
@@ -58,7 +59,7 @@ MULTIPROBE_RADIUS = 1
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Add double-precision vector + L2 norm columns (computed once).
-    Idempotent: an already-prepared relation (e.g. the session cache
+    Idempotent: an already-prepared relation (e.g. corpus_embeddings
     below) passes through unchanged."""
     if "emb_d" in df.columns:
         return df
@@ -70,42 +71,16 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("norm", F.sqrt(sq))
 
 
-# (sf_dir) -> (owning SparkSession, persisted normalized embeddings).
-# Same session-identity invalidation contract as dedup.corpus_shingle_sets.
-_EMB_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached, persisted ``with_norm`` embeddings corpus.
+    """Persisted ``with_norm`` embeddings corpus, once per snapshot.
 
     IVF alone reads the corpus 4+ times (seed sample, Lloyd rounds,
     assignment); LSH, brute-force, and the norm profile read it again.
     One persisted materialization (float->double transform + norm done
     once) serves every pass — the "prepare the vector table once per
     snapshot" move, session-local."""
-    hit = _EMB_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    e = with_norm(load_spread(spark, sf_dir, "embeddings")).persist()
-    _EMB_CACHE[sf_dir] = (spark, e)
-    return e
-
-
-# (sf_dir, k, iters) -> (owning SparkSession, trained centroid matrix).
-# The coarse quantizer is deterministic given the corpus snapshot, so
-# one training pays for every index consumer in the session (float IVF,
-# int8 IVF, semantic dedup) — the "train once per snapshot" move.
-_CENT_CACHE: dict[tuple, tuple[SparkSession, object]] = {}
-
-
-def corpus_centroids(spark: SparkSession, sf_dir: str, k: int, iters: int):
-    key = (sf_dir, k, iters)
-    hit = _CENT_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cents = train_ivf_centroids(corpus_embeddings(spark, sf_dir), k, iters)
-    _CENT_CACHE[key] = (spark, cents)
-    return cents
+    return with_norm(load_spread(spark, sf_dir, "embeddings")).persist()
 
 
 def cosine_expr(a: str, b: str):
@@ -298,6 +273,16 @@ IVF_LLOYD_ITERS = 2
 # bench corpus (n=2000) bit-identical to the unsampled formulation.
 LLOYD_SAMPLE_PER_CENTROID = 32
 LLOYD_SAMPLE_FLOOR = 4096
+
+
+@snapshot_cache
+def corpus_centroids(
+    spark: SparkSession, sf_dir: str, k: int = IVF_CLUSTERS, iters: int = IVF_LLOYD_ITERS
+):
+    """The coarse quantizer is deterministic given the corpus snapshot,
+    so one training pays for every index consumer (float IVF, int8
+    IVF, semantic dedup) — the "train once per snapshot" move."""
+    return train_ivf_centroids(corpus_embeddings(spark, sf_dir), k, iters)
 
 
 def _assign_clusters(vecs: DataFrame, centroids) -> DataFrame:
@@ -574,7 +559,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform (little cluster structure), so recall needs a wide
     probe — on real clustered embeddings nprobe/n_clusters drops."""
     e = corpus_embeddings(spark, sf_dir)
-    cents = corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
+    cents = corpus_centroids(spark, sf_dir)
     return ann_ivf_topk(spark, e.where(N_QUERIES_PRED), e, TOPK, centroids=cents)
 
 
@@ -685,23 +670,18 @@ def read_ivf_index(spark: SparkSession, path: str):
     )
 
 
-_IVF_INDEX_DIR: dict[str, str] = {}
-
-
+@snapshot_cache
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Write the corpus's IVF index into a per-process scratch dir
-    once (same once-per-process pattern as the mahjong fixture ETL)."""
-    hit = _IVF_INDEX_DIR.get(sf_dir)
-    if hit is None:
-        import tempfile
-
-        hit = tempfile.mkdtemp(prefix="ivf_index_")
-        cents = corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
-        write_ivf_index(
-            spark, corpus_embeddings(spark, sf_dir), hit, centroids=cents
-        )
-        _IVF_INDEX_DIR[sf_dir] = hit
-    return hit
+    """Write the corpus's IVF index into a scratch dir once per
+    snapshot; the persisted query reads it back cold."""
+    path = scratch_dir("ivf_index_")
+    write_ivf_index(
+        spark,
+        corpus_embeddings(spark, sf_dir),
+        path,
+        centroids=corpus_centroids(spark, sf_dir),
+    )
+    return path
 
 
 @query("similarity_ann_ivf_persisted", oracle=_ann_golden_oracle("ivf"), bench=False)
@@ -953,7 +933,7 @@ def similarity_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme, integrated into candidate scoring as pure integer dot
     products."""
     e = corpus_embeddings(spark, sf_dir)
-    cents = corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
+    cents = corpus_centroids(spark, sf_dir)
     return ann_ivf_int8_topk(
         spark, e.where(N_QUERIES_PRED), e, TOPK, centroids=cents
     )
@@ -1157,7 +1137,7 @@ def corpus_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = corpus_embeddings(spark, sf_dir)
-    cents = corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
+    cents = corpus_centroids(spark, sf_dir)
     assigned = _assign_clusters(e, cents)
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source", "n_chars"
@@ -1567,36 +1547,22 @@ def ann_pq_topk(
     )
 
 
-# (sf_dir) -> (owning session, trained PQ codebooks) and
-# (sf_dir) -> (owning session, persisted coded corpus): the PQ family
-# analogue of corpus_centroids / corpus_shingle_sets — training and
+# The PQ codebooks and the persisted coded corpus: training and
 # encoding are once-per-corpus-snapshot costs (the persisted index IS
 # that lifecycle on disk), so the three in-session consumers
 # (similarity_ann_pq, the RRF ensemble's PQ leg, _ensure_pq_index)
 # must not each pay their own Lloyd rounds + encode pass.
 # Deterministic training ⇒ identical books either way (golden-pinned).
-_PQ_BOOKS_CACHE: dict[str, tuple[SparkSession, object]] = {}
-_PQ_CODES_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@snapshot_cache
 def corpus_pq_codebooks(spark: SparkSession, sf_dir: str):
-    hit = _PQ_BOOKS_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    books = train_pq_codebooks(corpus_embeddings(spark, sf_dir))
-    _PQ_BOOKS_CACHE[sf_dir] = (spark, books)
-    return books
+    return train_pq_codebooks(corpus_embeddings(spark, sf_dir))
 
 
+@snapshot_cache
 def corpus_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _PQ_CODES_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    codes = pq_encode(
+    return pq_encode(
         corpus_embeddings(spark, sf_dir), corpus_pq_codebooks(spark, sf_dir)
     ).persist()
-    _PQ_CODES_CACHE[sf_dir] = (spark, codes)
-    return codes
 
 
 @query("similarity_ann_pq", oracle=_ann_golden_oracle("pq"))
@@ -1605,8 +1571,8 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; tests pin recall vs the brute-force baseline, same
     contract as the LSH/IVF variants).  The 32x-compressed code table
     is the declared path for indexes too large to hold as floats.
-    Codebooks + coded corpus come from the session snapshot caches
-    above (train/encode once, serve every consumer)."""
+    Codebooks + coded corpus come from the snapshot fills above
+    (train/encode once, serve every consumer)."""
     e = corpus_embeddings(spark, sf_dir)
     return ann_pq_topk(
         spark,
@@ -1677,23 +1643,16 @@ def read_pq_index(spark: SparkSession, path: str):
     )
 
 
-_PQ_INDEX_DIR: dict[str, str] = {}
-
-
+@snapshot_cache
 def _ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
-    hit = _PQ_INDEX_DIR.get(sf_dir)
-    if hit is None:
-        import tempfile
-
-        hit = tempfile.mkdtemp(prefix="pq_index_")
-        write_pq_index(
-            spark,
-            corpus_embeddings(spark, sf_dir),
-            hit,
-            books=corpus_pq_codebooks(spark, sf_dir),
-        )
-        _PQ_INDEX_DIR[sf_dir] = hit
-    return hit
+    path = scratch_dir("pq_index_")
+    write_pq_index(
+        spark,
+        corpus_embeddings(spark, sf_dir),
+        path,
+        books=corpus_pq_codebooks(spark, sf_dir),
+    )
+    return path
 
 
 @query("similarity_ann_pq_persisted", oracle=_ann_golden_oracle("pq"), bench=False)
@@ -1805,22 +1764,12 @@ def ivfpq_build(
     return cents, books, coded
 
 
-# (sf_dir) -> (owning session, (cents, books, persisted coded)) — the
-# IVFADC family cache, same once-per-corpus-snapshot contract as
-# corpus_centroids / corpus_pq_codebooks.
-_IVFPQ_CACHE: dict[str, tuple[SparkSession, tuple]] = {}
-
-
+@snapshot_cache
 def corpus_ivfpq(spark: SparkSession, sf_dir: str):
-    hit = _IVFPQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    cents, books, coded = ivfpq_build(
-        spark, corpus_embeddings(spark, sf_dir)
-    )
-    built = (cents, books, coded.persist())
-    _IVFPQ_CACHE[sf_dir] = (spark, built)
-    return built
+    """(cents, books, persisted coded corpus) — the IVFADC family's
+    unit-space centroids and residual codebooks, trained once."""
+    cents, books, coded = ivfpq_build(spark, corpus_embeddings(spark, sf_dir))
+    return cents, books, coded.persist()
 
 
 def ivfpq_adc_shortlist(
@@ -2170,25 +2119,14 @@ def read_ivfpq_index(spark: SparkSession, path: str):
     )
 
 
-_IVFPQ_INDEX_DIR: dict[str, str] = {}
-
-
+@snapshot_cache
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    hit = _IVFPQ_INDEX_DIR.get(sf_dir)
-    if hit is None:
-        import tempfile
-
-        hit = tempfile.mkdtemp(prefix="ivfpq_index_")
-        cents, books, _ = corpus_ivfpq(spark, sf_dir)
-        write_ivfpq_index(
-            spark,
-            corpus_embeddings(spark, sf_dir),
-            hit,
-            centroids=cents,
-            books=books,
-        )
-        _IVFPQ_INDEX_DIR[sf_dir] = hit
-    return hit
+    path = scratch_dir("ivfpq_index_")
+    cents, books, _ = corpus_ivfpq(spark, sf_dir)
+    write_ivfpq_index(
+        spark, corpus_embeddings(spark, sf_dir), path, centroids=cents, books=books
+    )
+    return path
 
 
 @query(
@@ -2425,7 +2363,7 @@ def similarity_rrf_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole ensemble end-to-end (each leg is itself golden-checked)."""
     e = corpus_embeddings(spark, sf_dir)
     q = e.where(N_QUERIES_PRED)
-    cents = corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
+    cents = corpus_centroids(spark, sf_dir)
     return rrf_fuse(
         [
             ann_lsh_topk(spark, q, e, TOPK),

@@ -14,8 +14,8 @@ The mahjong ETL plane (reference parity proper) is proven two ways:
 
 The comparison is deliberately asymmetric:
 
-- the SPARK side runs the full ETL fresh into a per-process scratch
-  directory (tempfile) and queries the files it just wrote, so the
+- the SPARK side runs the full ETL fresh into a scratch directory
+  once per application and queries the files it just wrote, so the
   scan → parse → mint → sink → read-back path is exercised every run;
 - the ORACLE side reads the COMMITTED golden tree (tests/fixtures/
   etl_oracle_output), which is never touched at runtime.
@@ -36,11 +36,11 @@ scale factors and rounds.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir, snapshot_cache
 from .registry import query
 
 _FIXTURES = os.path.join(
@@ -52,23 +52,19 @@ FIXTURE_LOGS = os.path.join(_FIXTURES, "logs")
 ORACLE_ETL_ROOT = os.path.join(_FIXTURES, "etl_oracle_output")
 PAIYAMA_FIXTURE = os.path.join(_FIXTURES, "paiyama_walls.parquet")
 
-_scratch_root: str | None = None
-
-
+@snapshot_cache
 def _ensure_etl(spark: SparkSession) -> str:
-    """Run the fixture ETL into a fresh scratch root once per process.
+    """Run the fixture ETL into a fresh scratch root once per
+    application.
 
     The committed golden tree is left untouched; a failure raises so a
     broken pipeline can never silently fall back to stale bytes.
     """
-    global _scratch_root
-    if _scratch_root is None:
-        from .etl import run_etl
+    from .etl import run_etl
 
-        scratch = tempfile.mkdtemp(prefix="mahjong_etl_scratch_")
-        run_etl(spark, FIXTURE_LOGS, scratch)
-        _scratch_root = scratch
-    return _scratch_root
+    root = scratch_dir("mahjong_etl_scratch_")
+    run_etl(spark, FIXTURE_LOGS, root)
+    return root
 
 
 def _read(spark: SparkSession, table: str) -> DataFrame:

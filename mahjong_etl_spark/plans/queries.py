@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.goldens import golden_oracle
+from ..session import scratch_dir
 from ..sources.tables import load
 from ..streaming.anomaly_stream import MIN_PREV, Z_K
 from .registry import query
@@ -1964,8 +1965,6 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir's problem, compaction.py's job in a real pipeline); schema-ON-
     read with an explicit StructType avoids the full-scan schema
     inference a naive read.json pays at 100 TB."""
-    import tempfile
-
     e = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     out = e.select(
         "event_id",
@@ -1973,7 +1972,7 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
         "value",
     )
-    path = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
+    path = scratch_dir("jsonl_roundtrip_")
     out.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "event_id long, user_id long, ts_s string, value double"
@@ -2025,12 +2024,10 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality scales with the data instead of serializing one hot
     status onto one writer); the read is a pushed-down scan + one
     map-side-combined aggregate."""
-    import tempfile
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderdate", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    path = scratch_dir("orc_roundtrip_")
     o.repartition(4, "o_orderstatus", "o_orderdate").sortWithinPartitions(
         "o_orderstatus", "o_orderdate"
     ).write.mode("overwrite").orc(path)
@@ -2074,12 +2071,10 @@ def csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-on-read with an explicit StructType skips the full-scan
     inference pass a naive read would pay at 100 TB; the aggregate is
     map-side combined on the segment key."""
-    import tempfile
-
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
-    path = tempfile.mkdtemp(prefix="csv_roundtrip_")
+    path = scratch_dir("csv_roundtrip_")
     c.write.mode("overwrite").option("header", True).option(
         "quoteAll", True
     ).csv(path)
@@ -2131,12 +2126,10 @@ def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine treats XML as an INGEST format to land into parquet once
     (plans/etl.py), never a query-plane format; this probe pins the
     value fidelity of that landing step."""
-    import tempfile
-
     p = load(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_size", "p_retailprice"
     )
-    path = tempfile.mkdtemp(prefix="xml_roundtrip_")
+    path = scratch_dir("xml_roundtrip_")
     p.write.mode("overwrite").format("xml").option("rowTag", "part").save(path)
     back = (
         spark.read.schema(

@@ -91,6 +91,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import drop, snapshot_cache
 from .etl_stream import (
     _lineage_id,
     _meta_fs,
@@ -141,60 +142,31 @@ DRIFT_SCHEMA = (
     "rebuild_recommended boolean, ts_ms long"
 )
 
-# (applicationId, index_dir, artifact) -> a frozen index artifact: the
-# centroid matrix, the PQ codebooks, or the drift baseline dict.
-# Keyed by applicationId, not id(sc) (ids reuse after stop).  Landed
-# index snapshots are treated as immutable, and the sanctioned
-# rebuilds (the write_*_index functions) invalidate this memo for their
-# path (invalidate_centroids below), so a same-application rebuild is
-# never encoded against stale components.  An out-of-band overwrite
-# from ANOTHER process remains invisible to the memo but is caught by
-# the epoch fence at the next stream start.
-_INDEX_MEMO: dict[tuple, object] = {}
-_CENTROID_CACHE = _INDEX_MEMO  # alias: callers clear the memo by this name
-
-
-def invalidate_centroids(index_dir: str) -> None:
-    """Drop every memoized artifact (centroids, codebooks, drift
-    baseline) for ``index_dir`` (called by every ``write_*_index``
-    rebuild, any app)."""
-    for key in [k for k in _INDEX_MEMO if k[1] == index_dir]:
-        del _INDEX_MEMO[key]
-
-
-def _memo(spark: SparkSession, index_dir: str, artifact: str, load):
-    key = (spark.sparkContext.applicationId, index_dir, artifact)
-    if key not in _INDEX_MEMO:
-        _INDEX_MEMO[key] = load()
-    return _INDEX_MEMO[key]
-
-
+# Landed index snapshots are immutable, and every sanctioned rebuild
+# (the write_*_index functions, through mark_index_rebuilt) drops both
+# fills below for its path, so a same-application rebuild is never
+# encoded against stale components.  An out-of-band overwrite from
+# ANOTHER process remains invisible to the cache but is caught by the
+# epoch fence at the next stream start.
+@snapshot_cache
 def _index_array(spark: SparkSession, index_dir: str, artifact: str):
     """The ``centroids`` or ``codebooks`` ndarray of a persisted
     index, read once per (application, index)."""
     from ..operators.similarity import _read_ndarray
 
-    return _memo(
-        spark,
-        index_dir,
-        artifact,
-        lambda: _read_ndarray(spark, f"{index_dir}/{artifact}"),
-    )
+    return _read_ndarray(spark, f"{index_dir}/{artifact}")
 
 
+@snapshot_cache
 def _index_baseline(spark: SparkSession, index_dir: str) -> dict:
     """Build-time drift baseline (written by every ``write_*_index``
     rebuild); a legacy index without one gets an empty dict — drift
     rows then carry null ratios and never flag on a ratio."""
-
-    def load() -> dict:
-        fs = _meta_fs(spark, index_dir)
-        p = f"{fs.root}/_drift/baseline.json"
-        if fs.kind(p) != "file":
-            return {}
-        return json.loads(fs.read_bytes(p).decode())
-
-    return _memo(spark, index_dir, "baseline", load)
+    fs = _meta_fs(spark, index_dir)
+    p = f"{fs.root}/_drift/baseline.json"
+    if fs.kind(p) != "file":
+        return {}
+    return json.loads(fs.read_bytes(p).decode())
 
 
 def assign_batch(
@@ -248,7 +220,7 @@ def _check_epoch(spark: SparkSession, index_dir: str, bound: str) -> None:
     """Per-batch half of the rebuild fence (ADVICE r12): the start-time
     check alone cannot see a ``write_ivf_index`` rebuild that lands
     while the maintenance stream is LIVE in the same application —
-    ``invalidate_centroids`` would make the very next micro-batch
+    the rebuild's ``drop`` would make the very next micro-batch
     silently assign against the NEW centroids and append vec_ids the
     rebuild already indexed, the exact duplicate-append the fence
     exists to prevent, just via the live path instead of restart.
@@ -439,14 +411,15 @@ def reset_drift_ledger(fs) -> None:
 
 def mark_index_rebuilt(spark: SparkSession, index_dir: str):
     """Rebuild bookkeeping shared by every ``write_*_index`` function,
-    run as soon as a rebuild's rows have landed: the memoized
-    components are dropped (``invalidate_centroids``), the pre-rebuild
+    run as soon as a rebuild's rows have landed: the cached
+    components and drift baseline are dropped, the pre-rebuild
     lineage's commit markers and drift ledger are cleared, and a fresh
     random ``_index_epoch`` fences every checkpoint bound to the old
     snapshot (module docstring).  Returns the index's metadata FS."""
     import uuid
 
-    invalidate_centroids(index_dir)
+    drop("_index_array", index_dir)
+    drop("_index_baseline", index_dir)
     fs = _meta_fs(spark, index_dir)
     if fs.kind(f"{fs.root}/_batch_commits") is not None:
         fs.delete_dir(f"{fs.root}/_batch_commits")

@@ -15,11 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # (quiet host, same tests, 32c/32p -> 8c/8p): codec+minhash-regime
 # files 120 -> 63 s, oracle-parity slice 172 -> 108 s, heavy
 # admission-gate tests 146 -> 92 s; 4c/4p measured no further gain.
-# This sizes only the TEST session (bench.py keeps the driver's
-# local[$SPARK_GRAFT_CPUS] contract); override with
-# SPARK_GRAFT_TEST_CPUS when debugging parallelism-sensitive
-# behavior at other core counts.
-os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+# 8 is only the default: a caller's SPARK_GRAFT_CPUS (the tier-1
+# command exports the host's nproc) wins, like the shuffle partitions.
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 
 from mahjong_etl_spark.session import get_spark  # noqa: E402

@@ -349,7 +349,7 @@ def test_frozen_centroids_read_once_per_session(spark, sf_dir, tmp_path):
         reads.append(path)
         return orig(spark_, path)
 
-    ais._CENTROID_CACHE.clear()
+    ais._index_array.cache_clear()
     try:
         sim._read_ndarray = counting
         a1 = {

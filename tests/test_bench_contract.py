@@ -18,9 +18,9 @@ def _expected_names() -> list[str]:
     from mahjong_etl_spark.plans.registry import registry
 
     benched = [n for n, q in registry().items() if q.bench]
-    # the two mahjong ETL probes plus the r15 named cache-fill line
-    # (the shared shingle/co-occurrence materialization, moved out of
-    # the untimed warm-up per the r14 verdict) are bench-only keys
+    # the two mahjong ETL probes are bench-only keys; so was the
+    # retired dedup_family_cache_fill line, which committed details up
+    # to r16 still carry (fills now go to the detail's cache_fills)
     return sorted(
         benched
         + ["mahjong_etl_1k", "mahjong_query_1k", "dedup_family_cache_fill"]
@@ -72,7 +72,7 @@ def test_compact_line_shape_and_size():
     # the slowest-queries dict survives whole with REAL query names
     assert len(parsed["queries"]) >= 5
     assert set(parsed["queries"]) <= set(timings)
-    assert parsed["qorder"] == "sorted(bench-names+mahjong_*_1k+cache-fill)"
+    assert parsed["qorder"] == "sorted(bench-names+mahjong_*_1k)"
     # the sha1 pin + sorted order reconstructs the full map
     rec = dict(zip(names, parsed["qvals"]))
     assert hashlib.sha1(

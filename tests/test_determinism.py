@@ -47,14 +47,14 @@ def _canon(df):
 
 
 def _drop_training_caches() -> None:
-    """BPE / classifier training is memoized per (session, sf_dir); the
+    """BPE / classifier training is memoized per (application, sf_dir); the
     invariance probe must RE-TRAIN at the alternate partitioning or the
     second run just replays the first run's result and the test is
     vacuous (round-4 advice)."""
     from mahjong_etl_spark.operators import bpe, classifier
 
-    bpe._BPE_CACHE.clear()
-    classifier._CLS_CACHE.clear()
+    bpe.corpus_bpe.cache_clear()
+    classifier.corpus_classifier.cache_clear()
 
 
 @pytest.mark.parametrize("name", PROBES)

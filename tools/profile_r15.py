@@ -73,17 +73,13 @@ def main() -> None:
                   if not n.startswith("mahjong_")][: args.slowest]
 
     from mahjong_etl_spark.plans.registry import registry
-    from mahjong_etl_spark.session import get_spark, local_rows_df
+    from mahjong_etl_spark.session import get_spark, local_rows_df, warm_snapshots
 
     spark = get_spark("profile-r15")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
 
     # same warm-up sequence as bench.py
-    if args.no_warm or args.runs == 0:
-        warm = False
-    else:
-        warm = True
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def _noop_mp(it):
@@ -92,24 +88,12 @@ def main() -> None:
 
     spark.range(64).repartition(32).mapInPandas(_noop_mp, "id long").collect()
     local_rows_df(spark, [(0,)], "i int").collect()
-    try:
-        if not warm:
-            raise RuntimeError("warm-up disabled")
-        from mahjong_etl_spark.operators.dedup import (
-            _dup_stats, _sem_centroids, corpus_jaccard_pairs)
-        from mahjong_etl_spark.operators.similarity import (
-            IVF_CLUSTERS, IVF_LLOYD_ITERS, corpus_centroids,
-            corpus_embeddings, corpus_ivfpq, corpus_pq_codebooks)
-        from mahjong_etl_spark.sources.tables import load_spread
-        _emb = corpus_embeddings(spark, sf_dir)
-        corpus_centroids(spark, sf_dir, IVF_CLUSTERS, IVF_LLOYD_ITERS)
-        _sem_centroids(spark, sf_dir, _emb)
-        corpus_pq_codebooks(spark, sf_dir)
-        corpus_ivfpq(spark, sf_dir)[2].count()
-        corpus_jaccard_pairs(spark, sf_dir).count()
-        _dup_stats(load_spread(spark, sf_dir, "documents"))
-    except Exception as exc:
-        print(f"warm-up skipped: {exc}", file=sys.stderr)
+    if not (args.no_warm or args.runs == 0):
+        try:
+            for name, sec in warm_snapshots(spark, sf_dir).items():
+                print(f"fill {name:38s} {sec:.3f}s", file=sys.stderr)
+        except Exception as exc:
+            print(f"warm-up skipped: {exc}", file=sys.stderr)
 
     plans_dir = os.path.join(HERE, "plans", "r15")
     os.makedirs(plans_dir, exist_ok=True)
